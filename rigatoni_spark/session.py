@@ -6,6 +6,27 @@ shuffle partitions sized to cores (on a 1000-executor cluster this would
 be ~2-3x total cores), UTC session timezone so results compare exactly
 against UTC-naive oracle engines, and Arrow enabled so any Pandas-UDF
 path is vectorized.
+
+Python workers run under the engine daemon, ``rigatoni_spark._pyworker``
+(``spark.python.daemon.module``). pyspark calls
+``importlib.invalidate_caches()`` at the start of every Python task, and
+before CPython 3.13 (gh-103200) that makes ``zipimport`` re-read the whole
+directory of every zip on the worker's path: ``pyspark.zip``, the py4j zip
+and the spark-core jar, 0.15-0.23 s of CPU per task on a 4-core x86 VM
+(PySpark 4.1.2, CPython 3.11), most of the Python CPU of the per-key
+stateful folds. The daemon runs
+pyspark's own ``daemon.manager()`` after one patch that skips the re-read
+while an archive's mtime and size are unchanged. On 3.13+ it changes
+nothing.
+
+Cluster requirement: ``rigatoni_spark`` must be importable on every
+executor when the daemon starts, i.e. installed there or on the
+executors' ``PYTHONPATH``. Shipping it only with ``addPyFile`` is not
+enough, since those files arrive per task, after the daemon is running.
+``get_spark`` puts this package's parent directory first on
+``spark.executorEnv.PYTHONPATH``, keeping any value passed in
+``extra_conf``; that covers local mode from any working directory and
+executors that share the driver's filesystem layout.
 """
 
 from __future__ import annotations
@@ -13,6 +34,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
 
 
 def get_spark(
@@ -59,8 +85,15 @@ def get_spark(
         # default thrashes and queries re-JIT on every revisit (observed
         # as random 5-30x stage slowdowns in long sessions)
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Python workers start under the engine daemon (module docstring),
+        # which executors must import from any working directory
+        .config("spark.python.daemon.module", "rigatoni_spark._pyworker")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    extra_conf[_PYTHONPATH_KEY] = os.pathsep.join(
+        filter(None, [_PACKAGE_PARENT, extra_conf.get(_PYTHONPATH_KEY)])
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
