@@ -44,7 +44,7 @@ def measure_latency(
     globally-unique event_id so the spine's per-batch dedup (still
     executed, still paid for) passes every row through and per-batch
     commit counts attribute events to feed walls exactly. The first two
-    files are warmup (cold probe-job path + codegen) and are excluded.
+    files are warmup (collection discovery + codegen) and are excluded.
     Also reports Spark's own per-trigger durationMs medians: addBatch
     is OUR foreachBatch (probe+write); walCommit / offset bookkeeping /
     trigger setup are engine-fixed cost."""

@@ -88,8 +88,8 @@ class _QueryState:
     ``foreachBatch`` invocations of a single query are serial, so no
     lock is needed — but the state must NOT be shared across queries:
     at COLLECTION watch level one query runs per collection, and a
-    small batch on one collection must not become the output-file-count
-    hint that coalesces another collection's burst into one task."""
+    small batch on one collection must not become the dedup-width hint
+    that squeezes another collection's burst through one partition."""
 
     last_n: int | None = None
     seen: set[str] = field(default_factory=set)
@@ -109,6 +109,11 @@ class _QueryState:
     cols: tuple | None = None
 
 
+# keys_written keeps this many of the most recent keys (~10 MiB of
+# strings): it is a recent-window manifest, the sink tree is the record
+_MAX_KEYS_WRITTEN = 100_000
+
+
 @dataclass
 class PipelineStats:
     """Running totals (PipelineStats, pipeline.rs:637-651)."""
@@ -121,7 +126,9 @@ class PipelineStats:
     dlq_events: int = 0
     dlq_replayed_batches: int = 0
     dlq_replayed_events: int = 0
-    keys_written: list[str] = field(default_factory=list)
+    keys_written: deque[str] = field(
+        default_factory=lambda: deque(maxlen=_MAX_KEYS_WRITTEN)
+    )
 
 
 class Pipeline:
@@ -219,8 +226,11 @@ class Pipeline:
 
     # observe-fused probing degrades gracefully: beyond this many
     # watched/seen collections the per-collection max-time metrics
-    # would bloat every micro-batch plan, so fall back to the probe-job
-    # path (a DATABASE-level deployment that wide is rare; the
+    # would bloat every micro-batch plan, so the observation drops them
+    # and the supplemental agg resolves every group time. That agg
+    # re-reads the unpersisted batch (source scan + dedup shuffle)
+    # after the write: a second pass on every trigger of a set this
+    # wide (a DATABASE-level deployment that wide is rare; the
     # reference fans one worker per collection well before this)
     _MAX_OBSERVED_COLLECTIONS = 64
 
@@ -265,16 +275,15 @@ class Pipeline:
         # staging and before any file reaches a final key. Only a batch
         # that carries a never-seen collection pays a supplemental agg
         # job for the unknown group times (and teaches the set for next
-        # time). The FIRST batch goes through the probe-job path
-        # instead: it both primes the output-file-count hint with an
-        # exact n (no hint = no small-file bound) and seeds the
-        # collection set, so a single-batch drain (availableNow, or
-        # batch_size covering the backlog) behaves exactly like the
-        # two-job design and multi-batch streams fuse from batch 2 on.
+        # time) — so a first batch with no known collection is simply a
+        # discovery batch. The batch is not persisted: that agg re-runs
+        # the source scan and any dedup shuffle after the write. Past
+        # _MAX_OBSERVED_COLLECTIONS the known set is dropped: the
+        # observation carries count + invalidate only and every row
+        # takes the supplemental agg.
         known = sorted(state.seen)
-        if state.last_n is None or len(known) > self._MAX_OBSERVED_COLLECTIONS:
-            self._foreach_batch_probed(batch_df, batch_id, t0, state)
-            return
+        if len(known) > self._MAX_OBSERVED_COLLECTIONS:
+            known = []
 
         from pyspark.sql import Observation
 
@@ -382,13 +391,15 @@ class Pipeline:
                 self.sink,
                 batch_id=batch_id,
                 deferred_probe=deferred,
-                # file-count hint: THIS query's previous batch size
-                # (steady state is uniform; per-query state so another
-                # collection's tiny batch can't shrink this one's write
-                # parallelism), floored at the configured batch_size so
-                # a burst arriving right after a tiny batch is never
-                # coalesced below the steady-state write parallelism.
-                n_events=max(state.last_n, self.config.batch_size),
+                # file-count hint: the configured batch size, never a
+                # size remembered from an earlier trigger. In multi-file
+                # mode it sets the coalesce width and so the batch's
+                # key set, which a replay after a restart (last_n
+                # forgotten) must reproduce. TRADE: a batch far above
+                # batch_size (a file source bounds files, not rows)
+                # writes with ceil(batch_size / 5000) tasks in that
+                # mode; single-file mode ignores the hint.
+                n_events=self.config.batch_size,
                 staging_scope=state.scope,
             )
             committed[self.sink.base_uri] = keys
@@ -410,7 +421,7 @@ class Pipeline:
                     mirror,
                     batch_id=batch_id,
                     group_times=batch_info["gt"],
-                    n_events=max(state.last_n, self.config.batch_size),
+                    n_events=self.config.batch_size,
                     staging_scope=state.scope,
                 )
             return [
@@ -434,13 +445,13 @@ class Pipeline:
         self, write_fn, batch_df=None, batch_id=None, scope=None,
         committed=None,
     ):
-        """R1 wrapper shared by both batch paths: retry policy from
-        config, retry/error accounting, invalidate passes through as
-        the terminal error it is (it also self-classifies as
-        non-retryable for with_retry). With a DLQ configured, an
-        exhausted/non-retryable failure routes the batch there and
-        returns None instead of raising — the caller skips its
-        finish-batch accounting and the stream continues.
+        """R1 wrapper shared by the batch body and ``replay_dlq``:
+        retry policy from config, retry/error accounting, invalidate
+        passes through as the terminal error it is (it also
+        self-classifies as non-retryable for with_retry). With a DLQ
+        configured, an exhausted/non-retryable failure routes the batch
+        there and returns None instead of raising — the caller skips
+        its finish-batch accounting and the stream continues.
 
         ``committed`` (base_uri -> keys, maintained by write_fn across
         attempts) names the sinks whose writes already committed; the
@@ -518,9 +529,10 @@ class Pipeline:
             # them, so a mirror's failure never re-writes the primary.
             # committed_keys carries those sinks' written KEY LISTS:
             # the objects are live and final, but the batch never
-            # reached _finish_batch, so without this record they would
-            # vanish from the manifest (stats.keys_written / replay's
-            # return) forever.
+            # reached _finish_batch, so without this record replay's
+            # returned key list (and the recent-key window
+            # stats.keys_written) would miss them; the sink tree
+            # itself is the full record.
             json.dump(
                 {
                     "scope": scope,
@@ -536,81 +548,6 @@ class Pipeline:
             self.stats.dlq_events += n
         self.metrics.inc(M.DLQ_BATCHES)
         self.metrics.inc(M.DLQ_EVENTS, n)
-
-    def _foreach_batch_probed(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        t0: float,
-        state: _QueryState | None = None,
-    ) -> None:
-        """Probe-job path (pre-observe design, kept for very wide
-        collection sets): one aggregation job, then the write job."""
-        state = state if state is not None else self._default_state
-        batch_df = batch_df.persist()
-        try:
-            per_coll = (
-                batch_df.groupBy("collection")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max("cluster_time").alias("t"),
-                    F.max(
-                        F.when(
-                            F.col("operation") == OP_INVALIDATE,
-                            # NULL collection on database-level
-                            # invalidates — same coalesce as the
-                            # observe path
-                            F.coalesce(F.col("collection"), F.lit("*")),
-                        )
-                    ).alias("invalidated"),
-                )
-                .collect()
-            )
-            n = sum(r["n"] for r in per_coll)
-            if n == 0:
-                return
-            invalidated = next(
-                (r["invalidated"] for r in per_coll if r["invalidated"]), None
-            )
-            if invalidated is not None:
-                self._invalidated = invalidated
-                raise StreamInvalidatedError(
-                    f"invalidate event on {self._invalidated}"
-                )
-            group_times = {r["collection"]: r["t"] for r in per_coll}
-
-            committed: dict[str, list[str]] = {}
-
-            def _write() -> list[str]:
-                # per-sink outcomes shared across attempts: committed
-                # sinks are final, retries only re-drive the failed ones
-                for s in self.sinks:
-                    if s.base_uri in committed:
-                        continue
-                    committed[s.base_uri] = write_batch(
-                        batch_df, s, batch_id=batch_id,
-                        group_times=group_times, n_events=n,
-                        staging_scope=state.scope,
-                    )
-                return [
-                    k
-                    for s in self.sinks
-                    for k in committed.get(s.base_uri, [])
-                ]
-
-            keys = self._retrying_write(
-                _write,
-                batch_df,
-                batch_id,
-                scope=state.scope,
-                committed=committed,
-            )
-            if keys is None:
-                return  # batch routed to the DLQ; stream continues
-            state.last_n = n
-            self._finish_batch(n, keys, set(group_times), t0, state)
-        finally:
-            batch_df.unpersist()
 
     def _finish_batch(
         self,
@@ -654,7 +591,7 @@ class Pipeline:
         max_files = max(1, self.config.batch_size // 100)
 
         def _start_query(name: str, df: DataFrame, seed: set[str]):
-            # one _QueryState per query: the file-count hint and the
+            # one _QueryState per query: the dedup-width hint and the
             # observed-collection set are per-stream facts (see
             # _QueryState's docstring for the cross-query hazard)
             state = _QueryState(seen=set(seed), scope=name)
@@ -946,10 +883,11 @@ class Pipeline:
             keys = self._retrying_write(_replay_write)
             if committed_keys:
                 # fold the sinks that committed BEFORE the park back in
-                # (their key lists rode the sidecar): the returned
-                # manifest — and stats.keys_written — then cover the
-                # batch's FULL object set, exactly as a never-failed
-                # run would have reported it, in sink order
+                # (their key lists rode the sidecar): the returned key
+                # list then covers the batch's FULL object set, exactly
+                # as a never-failed run would have reported it, in sink
+                # order (stats.keys_written, a recent-key window, gets
+                # the same list)
                 keys = [
                     k
                     for s in self.sinks

@@ -162,7 +162,10 @@ def test_direct_invalidate_compensating_delete(spark, tmp_path):
     behavior."""
     from datetime import datetime, timezone
 
-    from rigatoni_spark.streaming.pipeline import StreamInvalidatedError
+    from rigatoni_spark.streaming.pipeline import (
+        StreamInvalidatedError,
+        _QueryState,
+    )
 
     out = str(tmp_path / "out")
     os.makedirs(out)
@@ -184,12 +187,17 @@ def test_direct_invalidate_compensating_delete(spark, tmp_path):
         "cluster_time timestamp, document_key string, "
         "full_document string, resume_token string",
     )
-    for last_n in (None, 10):
+    # first batch, primed batch, and a set wider than
+    # _MAX_OBSERVED_COLLECTIONS (count-only observation)
+    for state in (
+        _QueryState(),
+        _QueryState(last_n=10, seen={"c0"}),
+        _QueryState(last_n=10, seen={f"w{i}" for i in range(65)}),
+    ):
         p._invalidated = None
-        p._default_state.last_n = last_n
         with pytest.raises(StreamInvalidatedError):
-            p._foreach_batch(batch, 0)
-        assert p.stats.keys_written == []
+            p._foreach_batch(batch, 0, state)
+        assert list(p.stats.keys_written) == []
         leftovers = [
             f
             for f in glob.glob(os.path.join(out, "**", "*"), recursive=True)

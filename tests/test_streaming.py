@@ -194,7 +194,10 @@ class TestPipelineE2E:
         staging dir, and raises."""
         from datetime import datetime, timezone
 
-        from rigatoni_spark.streaming.pipeline import StreamInvalidatedError
+        from rigatoni_spark.streaming.pipeline import (
+            StreamInvalidatedError,
+            _QueryState,
+        )
 
         src, out, ckpt = dirs
         cfg = PipelineConfig(batch_timeout_secs=1.0)
@@ -214,29 +217,34 @@ class TestPipelineE2E:
             "cluster_time timestamp, document_key string, "
             "full_document string, resume_token string",
         )
-        # first batch routes through the probe-job path; a primed
-        # last_n routes through the observe-fused path — the terminal
-        # contract must hold on BOTH
-        for last_n in (None, 10):
+        # a first batch (no hint, nothing known), a primed one with a
+        # per-collection metric, and a set wider than
+        # _MAX_OBSERVED_COLLECTIONS, whose count-only observation is all
+        # that detects the invalidate — the terminal contract must hold
+        # on each
+        for state in (
+            _QueryState(),
+            _QueryState(last_n=10, seen={"c0"}),
+            _QueryState(last_n=10, seen={f"w{i}" for i in range(65)}),
+        ):
             p._invalidated = None
-            p._default_state.last_n = last_n
             with pytest.raises(StreamInvalidatedError):
-                p._foreach_batch(batch, 0)
+                p._foreach_batch(batch, 0, state)
             assert p._invalidated is not None
             # the terminal error must not be retried as a transient:
             # re-staging a dead stream max_retries times both lies in
             # the retry metrics and delays the shutdown by the backoff
             assert p.stats.retries == 0
             # nothing written, nothing staged left behind
-            assert p.stats.keys_written == []
+            assert list(p.stats.keys_written) == []
             assert glob.glob(os.path.join(out, "**", "*"), recursive=True) == []
 
     def test_per_query_file_count_hints_are_isolated(self, spark, dirs):
-        """The observe-fused coalesce hint is per-query state: at
-        COLLECTION watch level one query runs per collection, and a
-        tiny batch on one collection must not become the file-count
-        hint that collapses another collection's burst into a single
-        write task."""
+        """The batch-size hint (last_n, which sizes the steady-state
+        dedup shuffle) is per-query state: at COLLECTION watch level
+        one query runs per collection, and a tiny batch on one
+        collection must not become the hint that squeezes another
+        collection's burst through a one-partition shuffle."""
         from datetime import datetime, timezone
 
         from rigatoni_spark.streaming.pipeline import _QueryState
@@ -263,36 +271,69 @@ class TestPipelineE2E:
 
         sa = _QueryState(seen={"c0"})
         sb = _QueryState(seen={"c1"})
-        p._foreach_batch(batch("c0", 3), 0, sa)  # first batch: probed
+        p._foreach_batch(batch("c0", 3), 0, sa)
         p._foreach_batch(batch("c1", 40), 0, sb)
         assert (sa.last_n, sb.last_n) == (3, 40)
-        # second batches take the observe-fused path, each reading and
-        # then updating its OWN hint
+        # second batches each read and then update their OWN hint
         p._foreach_batch(batch("c0", 5), 1, sa)
         p._foreach_batch(batch("c1", 60), 1, sb)
         assert (sa.last_n, sb.last_n) == (5, 60)
 
-        # a collection set wider than _MAX_OBSERVED_COLLECTIONS must
-        # route through the probe-job path even with a primed hint —
-        # the observe-fused plan would carry one max-time metric per
-        # collection, bloating every micro-batch plan
-        probed_batches = []
-        orig = p._foreach_batch_probed
-
-        def spy(bdf, bid, t0, state=None):
-            probed_batches.append(bid)
-            return orig(bdf, bid, t0, state)
-
-        p._foreach_batch_probed = spy
+        # a collection set wider than _MAX_OBSERVED_COLLECTIONS builds
+        # no per-collection max-time metric (one per collection would
+        # bloat every micro-batch plan): the observation carries count
+        # + invalidate only and the supplemental agg resolves every
+        # group time, so the keys keep their deterministic stems
         wide = _QueryState(
             last_n=10, seen={f"w{i}" for i in range(65)}
         )
-        p._foreach_batch(batch("w0", 4), 7, wide)
-        assert probed_batches == [7]
-        assert wide.last_n == 4
-        # ...while a narrow primed state stays fused (no probe call)
-        p._foreach_batch(batch("c0", 5), 8, sa)
-        assert probed_batches == [7]
+        before = len(p.stats.keys_written)
+        p._foreach_batch(batch("w0", 4).union(batch("w64", 3)), 7, wide)
+        assert wide.obs_exprs[0] == ()
+        assert wide.last_n == 7
+        assert sorted(list(p.stats.keys_written)[before:]) == [
+            f"{c}/2024/01/01/00/000000000007-1704067200000.jsonl"
+            for c in ("w0", "w64")
+        ]
+
+    def test_first_batch_rides_the_observation_fused_write(
+        self, spark, dirs, monkeypatch
+    ):
+        """Batch 0 after a start has no size hint and no known
+        collection, yet it runs the one batch body: no aggregation job
+        ahead of the write — the primary write carries the deferred
+        Observation probe, which resolves the group times after
+        staging, and the file-count hint is the configured floor."""
+        from rigatoni_spark.streaming import pipeline as P
+
+        src, out, ckpt = dirs
+        _feed(src, "a.parquet", 0, 300)
+        real = P.write_batch
+        calls = []
+
+        def record(df, cfg, batch_id=None, **kw):
+            calls.append((batch_id, kw))
+            return real(df, cfg, batch_id=batch_id, **kw)
+
+        monkeypatch.setattr(P, "write_batch", record)
+        cfg = PipelineConfig(batch_timeout_secs=1.0)
+        sink = S3SinkConfig(bucket=out, format=SerializationFormat.JSON)
+        p = Pipeline(spark, cfg, sink, src, ckpt).start()
+        p.process_all_available()
+        p.stop()
+        assert [bid for bid, _ in calls] == [0]
+        kw = calls[0][1]
+        assert kw.get("deferred_probe") is not None
+        assert kw.get("group_times") is None
+        assert kw["n_events"] == cfg.batch_size
+        assert p.stats.events_processed == 300
+        # the discovery agg taught every collection: real group-time
+        # stems, not wall-clock names
+        colls = {k.split("/")[0] for k in p.stats.keys_written}
+        assert colls == {"c0", "c1", "c2", "c3"}
+        assert all(
+            "/000000000000-" in k for k in p.stats.keys_written
+        ), p.stats.keys_written
 
     def test_null_collection_rows_route_as_unknown(self, spark, dirs):
         """Non-invalidate rows with a NULL collection must be treated
@@ -336,12 +377,12 @@ class TestPipelineE2E:
         assert None not in state.seen and state.seen == {"c0"}
         # replay -> byte-identical keys (wall-clock naming would drift)
         p._foreach_batch(batch, 0, state)
-        assert p.stats.keys_written == keys * 2
+        assert list(p.stats.keys_written) == keys * 2
 
     def test_burst_after_tiny_batch_keeps_write_parallelism(self, spark, dirs):
-        """The observe-fused file-count hint is floored at the
-        configured batch_size: a burst arriving right after a tiny
-        batch must not be coalesced into a single write task."""
+        """The file-count hint is the configured batch_size: a burst
+        arriving right after a tiny batch must not be coalesced into a
+        single write task."""
         from datetime import datetime, timezone
 
         from rigatoni_spark.streaming.pipeline import _QueryState
@@ -369,16 +410,74 @@ class TestPipelineE2E:
             )
 
         state = _QueryState(seen={"c0"})
-        p._foreach_batch(batch(3), 0, state)  # first batch: probed, last_n=3
+        p._foreach_batch(batch(3), 0, state)  # first batch: last_n=3
         assert state.last_n == 3
-        # burst arrives in 16 partitions; hint floor = ceil(10000/5000)
-        # = 2 coalesced tasks -> 2 part-files (the unfloored hint of 3
-        # events would coalesce to ONE task, serializing the write)
+        # burst arrives in 16 partitions; hint = ceil(10000/5000) = 2
+        # coalesced tasks -> 2 part-files (a hint of the previous
+        # batch's 3 events would coalesce to ONE task, serializing the
+        # write)
         p._foreach_batch(batch(64).repartition(16), 1, state)
         burst_keys = [
             k for k in p.stats.keys_written if "/000000000001-" in k
         ]
         assert len(burst_keys) == 2
+
+    @pytest.mark.parametrize("direct", [False, True])
+    def test_multi_file_replay_after_restart_rewrites_same_keys(
+        self, spark, dirs, direct
+    ):
+        """Multi-file groups: a batch replayed after a restart (fresh
+        per-query state, no remembered batch size, nothing known) must
+        write exactly the key set of the live attempt, so its objects
+        overwrite the originals instead of landing beside them as
+        duplicate rows — even when the batch before it was larger."""
+        from datetime import datetime, timezone
+
+        from rigatoni_spark.streaming.pipeline import _QueryState
+
+        src, out, ckpt = dirs
+        cfg = PipelineConfig(batch_timeout_secs=1.0, batch_size=100)
+        sink = S3SinkConfig(
+            bucket=out,
+            format=SerializationFormat.JSON,
+            partition_strategy=PartitionStrategy.COLLECTION_BASED,
+            single_file_per_group=False,
+            direct_write=direct,
+        )
+        p = Pipeline(spark, cfg, sink, src, ckpt)
+        t = datetime(2024, 1, 1, tzinfo=timezone.utc)
+
+        def batch(lo: int, n: int):
+            return spark.range(lo, lo + n, numPartitions=4).select(
+                F.lit("insert").alias("operation"),
+                F.lit("app").alias("database"),
+                F.lit("c0").alias("collection"),
+                F.lit(t).alias("cluster_time"),
+                F.format_string('{"_id": %d}', "id").alias("document_key"),
+                F.lit("{}").alias("full_document"),
+                F.col("id").cast("string").alias("resume_token"),
+            )
+
+        live = _QueryState(seen={"c0"})
+        p._foreach_batch(batch(0, 12_000), 0, live)
+        p._foreach_batch(batch(12_000, 6_000), 1, live)
+        live_keys = sorted(
+            k for k in p.stats.keys_written if "/000000000001-" in k
+        )
+        before = len(p.stats.keys_written)
+        p._foreach_batch(batch(12_000, 6_000), 1, _QueryState())
+        assert sorted(list(p.stats.keys_written)[before:]) == live_keys
+        on_disk = sorted(
+            os.path.relpath(f, out)
+            for f in glob.glob(os.path.join(out, "**", "*"), recursive=True)
+            if os.path.isfile(f) and "/000000000001-" in f
+        )
+        assert on_disk == live_keys
+        rows = 0
+        for key in on_disk:
+            with open(os.path.join(out, key)) as fh:
+                rows += sum(1 for line in fh if line.strip())
+        assert rows == 6_000
 
     def test_dedup_within_batch(self, spark, dirs):
         src, out, ckpt = dirs
@@ -769,7 +868,8 @@ class TestDeadLetterQueue:
         names the committed primary, in-process retries never re-drive
         it, replay_dlq re-drives ONLY the mirror, and the final object
         trees equal a never-failed mirrored run. fail_batch=0 hits the
-        probe-job first-batch path, fail_batch=1 the observe path."""
+        first batch (no size hint, discovery of every collection),
+        fail_batch=1 a steady-state batch."""
         from rigatoni_spark.streaming import pipeline as P
 
         src, out, ckpt = dirs
@@ -1075,3 +1175,19 @@ def test_async_tracking_spark_version_pin(monkeypatch):
     monkeypatch.setattr(pyspark, "__version__", "4.2.0")
     with pytest.raises(RuntimeError, match="OverrideSinkSupportCheck"):
         _assert_async_tracking_supported()
+
+
+def test_keys_written_keeps_only_the_most_recent(monkeypatch):
+    """A long-lived stream's key manifest is bounded: past
+    _MAX_KEYS_WRITTEN entries the oldest keys drop out."""
+    from rigatoni_spark.streaming import pipeline as P
+
+    monkeypatch.setattr(P, "_MAX_KEYS_WRITTEN", 3)
+    p = Pipeline(
+        None, PipelineConfig(), S3SinkConfig(bucket="/tmp/x"), "src", "ck"
+    )
+    state = P._QueryState()
+    for b in range(3):
+        p._finish_batch(2, [f"k{b}a", f"k{b}b"], {"c0"}, 0.0, state)
+    assert list(p.stats.keys_written) == ["k1b", "k2a", "k2b"]
+    assert p.stats.batches_written == 3
