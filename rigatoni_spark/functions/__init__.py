@@ -19,20 +19,6 @@ def json_field(col: Column | str, path: str) -> Column:
     return F.get_json_object(c, f"$.{path}")
 
 
-def hex_to_bigint(hex_col: Column, digits: int = 8) -> Column:
-    """First ``digits`` hex chars -> bigint (<= 15 digits stays within
-    int64). Cross-engine twin: DuckDB ``('0x' || substr(h,1,n))::BIGINT``."""
-    if digits > 15:
-        raise ValueError("more than 15 hex digits overflows a signed int64")
-    return F.conv(F.substring(hex_col, 1, digits), 16, 10).cast("bigint")
-
-
-def salted_hash(salt: int | str, col: Column) -> Column:
-    """Deterministic 'independent hash function' family: md5 of a
-    salt-prefixed value (used by MinHash/LSH instead of RNG seeds)."""
-    return F.md5(F.concat(F.lit(f"{salt}:"), col))
-
-
 def dot_product(a: Column, b: Column) -> Column:
     """Elementwise-double dot product as a left-to-right fold —
     deterministic summation order, identical cross-engine."""
@@ -45,10 +31,6 @@ def dot_product(a: Column, b: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot_product(a, a))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def namespace_full_name() -> Column:

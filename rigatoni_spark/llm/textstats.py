@@ -745,11 +745,6 @@ def _sq(s: str) -> str:
     return s.replace("\\", "\\\\").replace("'", "\\'")
 
 
-def _dq(s: str) -> str:
-    """Escape a literal for a DuckDB (ANSI) single-quoted string."""
-    return s.replace("'", "''")
-
-
 def _merge_fold_expr(inner: str, left: str, right: str, lvl: int) -> str:
     """Spark SQL for one greedy BPE merge application: a left fold over
     a symbol array. Scanning left-to-right, ``left`` followed by

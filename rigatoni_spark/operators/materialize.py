@@ -29,20 +29,14 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-SNAPSHOT_COLUMNS = [
-    "collection",
-    "document_key",
-    "operation",
-    "full_document",
-    "version",
-]
-
+from rigatoni_spark.operators import holdback
 
 def materialize(ce: DataFrame) -> DataFrame:
     """Current snapshot of every live document (batch log-compaction).
@@ -166,6 +160,7 @@ _OUT_SCHEMA = T.StructType(
         T.StructField("version", T.LongType()),
     ]
 )
+SNAPSHOT_COLUMNS = _OUT_SCHEMA.names
 
 
 def materialize_stream(ce: DataFrame) -> DataFrame:
@@ -252,55 +247,30 @@ _SCD2_STATE_SCHEMA = T.StructType(
 
 # reorder mode adds the bounded per-key hold-back buffer: events inside
 # the watermark delay wait here (columnar arrays, one list element per
-# held event) until the watermark proves no earlier event can arrive
+# held event) until the watermark proves no earlier event can arrive.
+# One row per buffer field: (state field, column the fold reads, numpy
+# dtype holdback.HoldBack decodes it to, Spark element type)
+_SCD2_BUFFER = [
+    ("buf_ops", "operation", object, T.StringType()),
+    ("buf_docs", "full_document", object, T.StringType()),
+    ("buf_vers", "__version", np.int64, T.LongType()),
+    ("buf_ts", holdback.TS_MS, np.int64, T.LongType()),
+]
 _SCD2_REORDER_STATE_SCHEMA = T.StructType(
     list(_SCD2_STATE_SCHEMA)
     + [
-        T.StructField("buf_ops", T.ArrayType(T.StringType(), True), True),
-        T.StructField("buf_docs", T.ArrayType(T.StringType(), True), True),
-        T.StructField("buf_vers", T.ArrayType(T.LongType(), True), True),
-        T.StructField("buf_ts", T.ArrayType(T.LongType(), True), True),
+        T.StructField(f, T.ArrayType(t, True), True)
+        for f, _, _, t in _SCD2_BUFFER
     ]
 )
-
-
-def _apply_scd2(key, events, open_op, open_doc, open_from, last_from):
-    """Apply (op, doc, version) triples IN ORDER to a key's
-    open-interval state: each event closes the open version (emitting
-    the finished interval row) and becomes the new open version
-    (deletes close without replacing). Shared by the strict-monotonic
-    fold and the reorder fold so both produce identical histories.
-    Returns (closed_rows, open_op, open_doc, open_from, last_from)."""
-    rows: list[tuple] = []
-    for op, doc, vf in events:
-        vf = int(vf)
-        if open_from is not None:
-            rows.append(
-                (key[0], key[1], open_op, open_doc, open_from, vf, 0)
-            )
-        if op == "delete":
-            open_op = open_doc = open_from = None
-        else:
-            open_op, open_doc, open_from = op, doc, vf
-        last_from = vf
-    return rows, open_op, open_doc, open_from, last_from
+# strict mode reads the same columns but __ts_ms
+_SCD2_COLUMNS = {c: dtype for _, c, dtype, _ in _SCD2_BUFFER}
 
 
 def _scd2_emit(rows: list[tuple]) -> pd.DataFrame:
     """Rows -> Arrow-safe pandas frame: nullable ints must not decay to
     float64 on the Arrow boundary (resume positions are exact longs)."""
-    out = pd.DataFrame(
-        rows,
-        columns=[
-            "collection",
-            "document_key",
-            "operation",
-            "full_document",
-            "valid_from",
-            "valid_to",
-            "is_current",
-        ],
-    )
+    out = pd.DataFrame(rows, columns=_SCD2_OUT_SCHEMA.names)
     out["valid_from"] = out["valid_from"].astype("Int64")
     out["valid_to"] = out["valid_to"].astype("Int64")
     out["is_current"] = out["is_current"].astype("int32")
@@ -308,22 +278,14 @@ def _scd2_emit(rows: list[tuple]) -> pd.DataFrame:
 
 
 def _require_monotonic(key, first: int, last_from: int | None) -> None:
-    """The monotonic-arrival canary, extracted so its MESSAGE is a
-    pinnable unit (tests/test_materialize.py asserts the text directly
-    — the streaming engine wraps in-fold exceptions a variable number
-    of layers deep, so a stream-level test can only pin that the query
-    fails loudly, not which message survived the wrapping)."""
-    if last_from is not None and first <= last_from:
-        raise ValueError(
-            f"out-of-order arrival for key {key}: event at "
-            f"position {first} is not after the state's last "
-            f"applied position {last_from} — per-key monotonic "
-            "arrival is a hard precondition of scd2_stream; "
-            "replay from the checkpoint in order, use "
-            "scd2_stream(reorder_within=...) for boundedly "
-            "out-of-order feeds, or the batch scd2_history for "
-            "unordered logs"
-        )
+    """scd2_stream's canary: holdback.require_monotonic with its remedy."""
+    holdback.require_monotonic(
+        key, first, last_from, "scd2_stream",
+        "replay from the checkpoint in order, use "
+        "scd2_stream(reorder_within=...) for boundedly out-of-order "
+        "feeds (a wider bound if it is set), or the batch scd2_history "
+        "for unordered logs",
+    )
 
 
 def scd2_stream(
@@ -335,12 +297,6 @@ def scd2_stream(
     finished interval, append mode) and becomes the new open version
     (deletes close without replacing, so a deleted key has no current
     row, exactly the batch semantics).
-
-    ``reorder_within`` (e.g. ``"30 minutes"``) opts into the BOUNDED
-    OUT-OF-ORDER mode for feeds that cannot guarantee per-key monotonic
-    arrival (multi-partition Kafka, file replays): see
-    :func:`_scd2_stream_reordered`. Default None keeps the strict
-    monotonic contract below.
 
     Emission contract: a version's interval row is emitted CLOSED the
     moment its successor arrives — exact and final. The key's latest
@@ -354,75 +310,22 @@ def scd2_stream(
     :func:`scd2_history` row-for-row, which is what the catalog row
     pins against the SAME oracle.
 
-    Same HARD PRECONDITION as ``as_change_events_stateful``: per-key
-    monotonic arrival across micro-batches (file-feed and Kafka
-    per-partition order both satisfy it); an out-of-order arrival
-    fails the micro-batch loudly rather than corrupting intervals.
+    Default (strict) mode has the same HARD PRECONDITION as
+    ``as_change_events_stateful``: per-key monotonic arrival across
+    micro-batches (file-feed and Kafka per-partition order both satisfy
+    it); an out-of-order arrival fails the micro-batch loudly rather
+    than corrupting intervals.
 
-    Scale: state is one small struct per LIVE key (independent of log
-    length; RocksDB spills off-heap); one hash exchange per
-    micro-batch; per-key per-batch fold is a short python loop over
-    that key's batch rows inside the Arrow-transferred group."""
-    if reorder_within is not None:
-        return _scd2_stream_reordered(ce, reorder_within)
-
-    def fold(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            open_op, open_doc, open_from, last_from = state.get
-        else:
-            open_op = open_doc = open_from = last_from = None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                .sort_values("__version")
-                .reset_index(drop=True)
-            )
-            first = int(pdf["__version"].iloc[0])
-            _require_monotonic(key, first, last_from)
-            rows, open_op, open_doc, open_from, last_from = _apply_scd2(
-                key,
-                zip(
-                    pdf["operation"], pdf["full_document"], pdf["__version"]
-                ),
-                open_op,
-                open_doc,
-                open_from,
-                last_from,
-            )
-            if open_from is not None:
-                # provisional current row (superseded if closed later)
-                rows.append(
-                    (key[0], key[1], open_op, open_doc, open_from, None, 1)
-                )
-            if rows:
-                yield _scd2_emit(rows)
-        state.update((open_op, open_doc, open_from, last_from))
-
-    prepared = ce.withColumn(
-        "__version", F.col("resume_token").cast("bigint")
-    )
-    return prepared.groupBy("collection", "document_key").applyInPandasWithState(
-        fold,
-        outputStructType=_SCD2_OUT_SCHEMA,
-        stateStructType=_SCD2_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _scd2_stream_reordered(ce: DataFrame, reorder_within: str) -> DataFrame:
-    """scd2_stream's BOUNDED OUT-OF-ORDER mode (round-11 ask #4): the
-    Flink bounded-out-of-orderness posture on Spark state. Events wait
-    in a per-key hold-back buffer until the event-time watermark
-    (``withWatermark(cluster_time, reorder_within)``) proves no earlier
-    event can still be ACCEPTED; released events then apply through the
-    same open-interval fold in resume-position order, so every emitted
-    closed row is final — append mode never has to retract.
+    ``reorder_within`` (e.g. ``"30 minutes"``) opts into the BOUNDED
+    OUT-OF-ORDER mode for feeds that cannot guarantee per-key monotonic
+    arrival (multi-partition Kafka, file replays) — the Flink
+    bounded-out-of-orderness posture on Spark state. Events wait in a
+    per-key hold-back buffer (operators/holdback.py) until the
+    event-time watermark (``withWatermark(cluster_time,
+    reorder_within)``) proves no earlier event can still be ACCEPTED;
+    released events then apply through the same open-interval fold in
+    resume-position order, so every emitted closed row is final —
+    append mode never has to retract.
 
     Release rule: a buffered event applies once its event time is
     strictly below the current watermark. Safety rests on resume
@@ -442,107 +345,72 @@ def _scd2_stream_reordered(ce: DataFrame, reorder_within: str) -> DataFrame:
     per-key event-time TIMEOUTS re-invoke the fold for keys whose
     buffers became releasable without receiving new rows.
 
-    Scale: state grows by at most the events a key receives within one
-    ``reorder_within`` window (the buffer drains as the watermark
-    advances) on top of the one open-version struct; the exchange and
-    Arrow-group shapes are identical to the strict mode."""
+    Scale: state is one small struct per LIVE key (independent of log
+    length; RocksDB spills off-heap), plus in reorder mode at most the
+    events a key receives within one ``reorder_within`` window (the
+    buffer drains as the watermark advances); one hash exchange per
+    micro-batch; per-key per-batch fold is a short python loop over
+    that key's released rows inside the Arrow-transferred group."""
+    reorder = reorder_within is not None
 
     def fold(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (
-                open_op,
-                open_doc,
-                open_from,
-                last_from,
-                buf_ops,
-                buf_docs,
-                buf_vers,
-                buf_ts,
-            ) = state.get
-            buf = list(
-                zip(buf_ops or (), buf_docs or (), buf_vers or (), buf_ts or ())
-            )
-        else:
-            open_op = open_doc = open_from = last_from = None
-            buf = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        for pdf in chunks:
-            buf.extend(
-                zip(
-                    pdf["operation"],
-                    (
-                        None if pd.isna(d) else d
-                        for d in pdf["full_document"]
-                    ),
-                    (int(v) for v in pdf["__version"]),
-                    (int(t) for t in pdf["__ts_ms"]),
-                )
-            )
-        wm = state.getCurrentWatermarkMs()
-        buf.sort(key=lambda r: r[2])
-        if wm > 0:
-            release = [r for r in buf if r[3] < wm]
-            hold = [r for r in buf if r[3] >= wm]
-        else:
-            release, hold = [], buf
+        hb = holdback.HoldBack(
+            state, pdfs, _SCD2_COLUMNS, ("__version",), reorder
+        )
+        open_op, open_doc, open_from, last_from = hb.head or (None,) * 4
+        vers = hb.released["__version"].tolist()
         rows: list[tuple] = []
-        if release:
-            # the canary survives in this mode: releases must still be
-            # monotone vs the applied prefix — a violation means event
-            # time and resume position disagree beyond the bound
-            _require_monotonic(key, release[0][2], last_from)
-            rows, open_op, open_doc, open_from, last_from = _apply_scd2(
-                key,
-                ((op, doc, vf) for op, doc, vf, _ts in release),
-                open_op,
-                open_doc,
-                open_from,
-                last_from,
-            )
-        if open_from is not None and (chunks or release):
+        if vers:
+            _require_monotonic(key, vers[0], last_from)
+            for op, doc, vf in zip(
+                hb.released["operation"].tolist(),
+                hb.released["full_document"].tolist(),
+                vers,
+            ):
+                # each event closes the open version (emitting the
+                # finished interval) and becomes the new open version;
+                # deletes close without replacing
+                if open_from is not None:
+                    rows.append(
+                        (key[0], key[1], open_op, open_doc, open_from, vf, 0)
+                    )
+                if op == "delete":
+                    open_op = open_doc = open_from = None
+                else:
+                    open_op, open_doc, open_from = op, doc, vf
+            last_from = vers[-1]
+        if open_from is not None and (hb.arrived or vers):
             # provisional current row (superseded if closed later)
             rows.append(
                 (key[0], key[1], open_op, open_doc, open_from, None, 1)
             )
         if rows:
             yield _scd2_emit(rows)
-        state.update(
-            (
-                open_op,
-                open_doc,
-                open_from,
-                last_from,
-                [r[0] for r in hold],
-                [r[1] for r in hold],
-                [r[2] for r in hold],
-                [r[3] for r in hold],
-            )
-        )
-        if hold:
-            # wake this key the moment its earliest held event becomes
-            # releasable, even if it never receives another row; held
-            # timestamps are >= wm by construction, so the target is
-            # always ahead of the current watermark (a setTimeout
-            # requirement)
-            state.setTimeoutTimestamp(
-                max(wm + 1, min(r[3] for r in hold) + 1)
-            )
+        hb.commit((open_op, open_doc, open_from, last_from))
 
-    prepared = (
-        ce.withWatermark("cluster_time", reorder_within)
-        .withColumn("__version", F.col("resume_token").cast("bigint"))
-        .withColumn("__ts_ms", F.unix_millis(F.col("cluster_time")))
+    if reorder:
+        ce = ce.withWatermark("cluster_time", reorder_within).withColumn(
+            holdback.TS_MS, F.unix_millis(F.col("cluster_time"))
+        )
+    prepared = ce.withColumn(
+        "__version", F.col("resume_token").cast("bigint")
     )
     return prepared.groupBy("collection", "document_key").applyInPandasWithState(
         fold,
         outputStructType=_SCD2_OUT_SCHEMA,
-        stateStructType=_SCD2_REORDER_STATE_SCHEMA,
+        stateStructType=(
+            _SCD2_REORDER_STATE_SCHEMA if reorder else _SCD2_STATE_SCHEMA
+        ),
         outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout
+            if reorder
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 
 

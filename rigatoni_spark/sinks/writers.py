@@ -241,10 +241,10 @@ def write_batch(
     detection) aborts the batch: the staging dir is deleted and
     nothing reaches a final key. An empty dict means an empty batch —
     staging is discarded and no keys are produced. ``n_events`` then
-    serves only as the output-file-count hint (the caller's previous
-    batch size floored at the configured batch size, so the hint never
-    collapses a full batch into too few files after a small trigger;
-    None skips the coalesce bound for that batch).
+    serves only as the output-file-count hint (the streaming pipeline
+    passes its configured ``batch_size`` on every batch, so a batch
+    replayed after a restart writes the same multi-file key set; None
+    skips the coalesce bound for that batch).
 
     ``staging_scope`` isolates the temporary staging dir between
     CONCURRENT callers sharing one ``base_uri``: at COLLECTION watch
@@ -518,8 +518,11 @@ def _write_persisted(
         )
     elif n_events is not None:
         # multi-file groups: still bound the file count by batch size
-        # (coalesce is narrow — no shuffle; only bites on small batches,
-        # where write parallelism is irrelevant anyway). Unconditional:
+        # (coalesce is narrow — no shuffle). It bites on small batches,
+        # where write parallelism is irrelevant anyway, and, for the
+        # pipeline's config-sized hint, on batches far above
+        # ``batch_size``, which it writes with fewer, larger tasks
+        # (ceil(batch_size / _TARGET_ROWS_PER_FILE)). Unconditional:
         # coalesce(n) at-or-above the current partition count is a
         # no-op, and probing the count via .rdd would force plan
         # finalization under AQE — a per-micro-batch JVM round trip the

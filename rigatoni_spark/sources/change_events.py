@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rigatoni_spark.operators import holdback
+
 # Pre-image modes (FullDocumentBeforeChangeType,
 # rigatoni-core/src/stream.rs:479-501; options mapping stream.rs:579-608)
 PRE_IMAGE_OFF = "off"
@@ -278,6 +280,46 @@ def _envelope_select(
     return df.select(*cols)
 
 
+_PRE_IMAGE_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("last_props", T.StringType()),
+        # (ts nanos, event_id) of the last APPLIED event: the
+        # monotonic-arrival canary (see as_change_events_stateful) — an
+        # older arrival means the state payload is not this event's
+        # pre-image and must fail loudly.
+        # NOTE: widening this schema (1 field -> 3) is a state-
+        # schema MIGRATION: checkpoints written by the 1-field
+        # version cannot resume against it — restart such streams
+        # from a fresh checkpointLocation (replay is idempotent;
+        # the sink's deterministic keys make rewrites byte-stable).
+        T.StructField("last_ts", T.LongType()),
+        T.StructField("last_eid", T.LongType()),
+    ]
+)
+
+# reorder mode's hold-back buffer keeps WHOLE rows (columnar arrays, ts
+# as epoch nanos) — unlike scd2's version-only state, a pre-image needs
+# every envelope column back at release time. One row per buffer field:
+# (state field, column, numpy dtype holdback.HoldBack decodes it to,
+# Spark element type)
+_PRE_IMAGE_BUFFER = [
+    ("buf_eid", "event_id", "int64", T.LongType()),
+    ("buf_ts", "ts", "datetime64[ns]", T.LongType()),
+    ("buf_type", "event_type", object, T.StringType()),
+    ("buf_value", "value", "float64", T.DoubleType()),
+    ("buf_props", "props", object, T.StringType()),
+    ("buf_ms", holdback.TS_MS, "int64", T.LongType()),
+]
+_PRE_IMAGE_REORDER_STATE_SCHEMA = T.StructType(
+    list(_PRE_IMAGE_STATE_SCHEMA.fields)
+    + [
+        T.StructField(f, T.ArrayType(t, True), True)
+        for f, _, _, t in _PRE_IMAGE_BUFFER
+    ]
+)
+_PRE_IMAGE_COLUMNS = {c: dtype for _, c, dtype, _ in _PRE_IMAGE_BUFFER}
+
+
 def as_change_events_stateful(
     df: DataFrame,
     update_lookup: bool = True,
@@ -310,13 +352,12 @@ def as_change_events_stateful(
     globally.
 
     ``reorder_within`` (e.g. ``"30 minutes"``) opts into the BOUNDED
-    OUT-OF-ORDER mode — the same hold-back-buffer posture as
-    ``scd2_stream(reorder_within=...)`` (operators/materialize.py):
-    events wait in per-key state until the event-time watermark
-    (``withWatermark(ts, reorder_within)``) proves no earlier event can
-    still be accepted, then apply in (ts, event_id) order through the
-    same seam logic; event-time timeouts flush keys whose buffers
-    became releasable without new rows. Same trades, stated plainly:
+    OUT-OF-ORDER mode — the per-key hold-back of
+    ``scd2_stream(reorder_within=...)`` (operators/holdback.py) on
+    ``withWatermark(ts, reorder_within)``: events wait in per-key state
+    until the watermark proves no earlier event can still be accepted,
+    then apply in (ts, event_id) order through the same seam logic.
+    Same release rule and trades as scd2_stream, stated plainly:
     events later than the bound are dropped by the engine, and a
     bounded replay's tail only flushes when a later event or an
     explicit heartbeat/sentinel advances the watermark. The monotonic
@@ -340,207 +381,85 @@ def as_change_events_stateful(
     from collections.abc import Iterator
     from typing import Any
 
+    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    reorder = reorder_within is not None
+    raw_cols = df.columns
+    expected = {"event_id", "ts", "user_id", "event_type", "value", "props"}
+    if reorder and set(raw_cols) != expected:
+        raise ValueError(
+            "reorder_within buffers whole rows and supports exactly "
+            f"the raw events schema {sorted(expected)}; got {raw_cols}"
+        )
+    # strict mode passes any extra column through as it comes; user_id
+    # is the group key, so both modes rebuild it from the key
+    columns = (
+        _PRE_IMAGE_COLUMNS
+        if reorder
+        else dict.fromkeys(c for c in raw_cols if c != "user_id")
+    )
     out_schema = T.StructType(
         list(df.schema.fields)
         + [T.StructField("_prev_props", T.StringType(), True)]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_props", T.StringType()),
-            # (ts nanos, event_id) of the last APPLIED event: the
-            # monotonic-arrival canary (see docstring) — an older
-            # arrival means the state payload is not this event's
-            # pre-image and must fail loudly.
-            # NOTE: widening this schema (1 field -> 3) is a state-
-            # schema MIGRATION: checkpoints written by the 1-field
-            # version cannot resume against it — restart such streams
-            # from a fresh checkpointLocation (replay is idempotent;
-            # the sink's deterministic keys make rewrites byte-stable).
-            T.StructField("last_ts", T.LongType()),
-            T.StructField("last_eid", T.LongType()),
-        ]
-    )
-    raw_cols = df.columns
 
     def attach_prev(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        last, last_ts, last_eid = state.get if state.exists else (None,) * 3
-        # a key's micro-batch rows can span multiple Arrow chunks in
-        # shuffle (not time) order — concatenate and sort ONCE; sorting
-        # chunks independently would corrupt the seam payloads
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            ).reset_index(drop=True)
-            if last_ts is not None:
-                first = (int(pdf["ts"].iloc[0].value), int(pdf["event_id"].iloc[0]))
-                if first < (last_ts, last_eid):
-                    raise ValueError(
-                        f"out-of-order arrival for key {key}: event "
-                        f"(ts={pdf['ts'].iloc[0]}, event_id={first[1]}) is "
-                        "older than the state's last applied event — "
-                        "per-key monotonic arrival is a hard precondition "
-                        "of as_change_events_stateful; replay from the "
-                        "checkpoint in order, or use the batch LAG path "
-                        "for unordered logs"
-                    )
+        # a key's rows can span multiple Arrow chunks in shuffle (not
+        # time) order: the hold-back orders them ONCE across chunks (and
+        # the buffer) — sorting chunks independently would corrupt the
+        # seam payloads
+        hb = holdback.HoldBack(state, pdfs, columns, ("ts", "event_id"), reorder)
+        last, last_ts, last_eid = hb.head or (None,) * 3
+        rel = hb.released
+        n = len(rel["event_id"])
+        if n:
+            ts_ns = rel["ts"].astype("datetime64[ns]").view("int64")
+            eid = rel["event_id"]
+            holdback.require_monotonic(
+                key,
+                (int(ts_ns[0]), int(eid[0])),
+                None if last_ts is None else (last_ts, last_eid),
+                "as_change_events_stateful",
+                "replay from the checkpoint in order, set or widen "
+                "reorder_within for boundedly out-of-order feeds, or use "
+                "the batch LAG path for unordered logs",
+                ties_ok=True,
+            )
             # vectorized per-key LAG: shift by one, seam filled from state
-            prevs = pdf["props"].astype(object).shift(1)
-            prevs.iloc[0] = last
-            last = pdf["props"].iloc[-1]
-            last_ts = int(pdf["ts"].iloc[-1].value)
-            last_eid = int(pdf["event_id"].iloc[-1])
-            pdf = pdf[raw_cols].copy()
-            pdf["_prev_props"] = prevs
-            yield pdf
-        state.update((last, last_ts, last_eid))
+            prevs = np.empty(n, dtype=object)
+            prevs[0] = last
+            prevs[1:] = rel["props"][:-1]
+            last = rel["props"][-1]
+            last_ts, last_eid = int(ts_ns[-1]), int(eid[-1])
+            out = {
+                c: np.full(n, key[0]) if c == "user_id" else rel[c]
+                for c in raw_cols
+            }
+            yield pd.DataFrame({**out, "_prev_props": prevs})
+        hb.commit((last, last_ts, last_eid))
 
-    if reorder_within is not None:
-        expected = {"event_id", "ts", "user_id", "event_type", "value", "props"}
-        if set(raw_cols) != expected:
-            raise ValueError(
-                "reorder_within buffers whole rows and supports exactly "
-                f"the raw events schema {sorted(expected)}; got {raw_cols}"
-            )
-        # the hold-back buffer keeps WHOLE rows (columnar arrays, ts as
-        # epoch nanos) — unlike scd2's version-only state, a pre-image
-        # needs every envelope column back at release time
-        state_schema_r = T.StructType(
-            list(state_schema.fields)
-            + [
-                T.StructField("buf_eid", T.ArrayType(T.LongType(), True), True),
-                T.StructField("buf_ts", T.ArrayType(T.LongType(), True), True),
-                T.StructField("buf_type", T.ArrayType(T.StringType(), True), True),
-                T.StructField("buf_value", T.ArrayType(T.DoubleType(), True), True),
-                T.StructField("buf_props", T.ArrayType(T.StringType(), True), True),
-                T.StructField("buf_ms", T.ArrayType(T.LongType(), True), True),
-            ]
+    if reorder:
+        df = df.withWatermark("ts", reorder_within).withColumn(
+            holdback.TS_MS, F.unix_millis(F.col("ts"))
         )
-
-        def attach_prev_reordered(
-            key: tuple[Any, ...],
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            if state.exists:
-                (
-                    last, last_ts, last_eid,
-                    b_eid, b_ts, b_type, b_val, b_props, b_ms,
-                ) = state.get
-                buf = list(
-                    zip(
-                        b_eid or (), b_ts or (), b_type or (),
-                        b_val or (), b_props or (), b_ms or (),
-                    )
-                )
-            else:
-                last = last_ts = last_eid = None
-                buf = []
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                buf.extend(
-                    zip(
-                        (int(e) for e in pdf["event_id"]),
-                        (int(t.value) for t in pdf["ts"]),
-                        pdf["event_type"],
-                        (
-                            None if pd.isna(v) else float(v)
-                            for v in pdf["value"]
-                        ),
-                        (None if pd.isna(p) else p for p in pdf["props"]),
-                        # epoch-UTC ms derived JVM-side (F.unix_millis)
-                        # — pdf["ts"].value is session-tz-naive nanos
-                        # after the Arrow transfer, comparable to the
-                        # epoch-UTC watermark only under a UTC session;
-                        # __ts_ms is comparable under ANY session tz
-                        (int(m) for m in pdf["__ts_ms"]),
-                    )
-                )
-            wm = state.getCurrentWatermarkMs()
-            buf.sort(key=lambda r: (r[1], r[0]))
-            if wm > 0:
-                release = [r for r in buf if r[5] < wm]
-                hold = [r for r in buf if r[5] >= wm]
-            else:
-                release, hold = [], buf
-            if release:
-                first = (release[0][1], release[0][0])
-                if last_ts is not None and first < (last_ts, last_eid):
-                    raise ValueError(
-                        f"out-of-order arrival for key {key}: released "
-                        f"event (ts_ns={first[0]}, event_id={first[1]}) is "
-                        "older than the state's last applied event — the "
-                        "feed's disorder exceeds reorder_within (event "
-                        "time and arrival disagree beyond the bound); "
-                        "widen the bound or use the batch LAG path"
-                    )
-                # seam-filled LAG over the RELEASED prefix, in order
-                prevs = [last] + [r[4] for r in release[:-1]]
-                last = release[-1][4]
-                last_ts, last_eid = release[-1][1], release[-1][0]
-                out = pd.DataFrame(
-                    {
-                        "event_id": pd.Series(
-                            [r[0] for r in release], dtype="int64"
-                        ),
-                        "ts": pd.to_datetime([r[1] for r in release]),
-                        "user_id": pd.Series(
-                            [key[0]] * len(release), dtype="int64"
-                        ),
-                        "event_type": [r[2] for r in release],
-                        "value": pd.Series(
-                            [r[3] for r in release], dtype="float64"
-                        ),
-                        "props": [r[4] for r in release],
-                        "_prev_props": prevs,
-                    }
-                )
-                yield out[raw_cols + ["_prev_props"]]
-            state.update(
-                (
-                    last, last_ts, last_eid,
-                    [r[0] for r in hold], [r[1] for r in hold],
-                    [r[2] for r in hold], [r[3] for r in hold],
-                    [r[4] for r in hold], [r[5] for r in hold],
-                )
-            )
-            if hold:
-                # held rows have ts_ms >= wm, so the target is always
-                # ahead of the watermark (a setTimeout requirement)
-                state.setTimeoutTimestamp(
-                    max(wm + 1, min(r[5] for r in hold) + 1)
-                )
-
-        with_prev = (
-            df.withWatermark("ts", reorder_within)
-            .withColumn("__ts_ms", F.unix_millis(F.col("ts")))
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                attach_prev_reordered,
-                outputStructType=out_schema,
-                stateStructType=state_schema_r,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-        return _envelope_select(
-            with_prev, update_lookup, before_images, update_description
-        )
-
     with_prev = df.groupBy("user_id").applyInPandasWithState(
         attach_prev,
         outputStructType=out_schema,
-        stateStructType=state_schema,
+        stateStructType=(
+            _PRE_IMAGE_REORDER_STATE_SCHEMA if reorder else _PRE_IMAGE_STATE_SCHEMA
+        ),
         outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout
+            if reorder
+            else GroupStateTimeout.NoTimeout
+        ),
     )
     return _envelope_select(
         with_prev, update_lookup, before_images, update_description
@@ -773,29 +692,9 @@ def read_change_events_stream(
     must pass through untouched. Hardcoding either assumption lands
     event-times 1000x off when the data is the other kind.
     """
-    from rigatoni_spark.sources.events_schema import (
-        RAW_EVENTS_SCHEMA_NANOS,
-        raw_events_schema_for,
+    raw = read_raw_events_stream(
+        spark, events_dir, max_files_per_trigger, path_glob
     )
-    from rigatoni_spark.tables import ensure_session_confs, normalize_ts
-
-    ensure_session_confs(spark)
-    ts_type = _probe_ts_type(spark, events_dir, path_glob)
-    if isinstance(ts_type, T.LongType):
-        schema = RAW_EVENTS_SCHEMA_NANOS
-    else:
-        schema = raw_events_schema_for(ts_type)
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if path_glob is not None:
-        # select specific files inside a mixed directory (the streaming
-        # source requires a directory basePath)
-        reader = reader.option("pathGlobFilter", path_glob)
-    # normalize_ts lands ts on TimestampType from either physical kind —
-    # required for withWatermark (rejects TIMESTAMP_NTZ) and keeps the
-    # streaming output schema identical across testdata regens
-    raw = normalize_ts(reader.load(events_dir), "ts")
     needs_prev = update_description or before_images != PRE_IMAGE_OFF
     if needs_prev:
         from rigatoni_spark.operators.filters import match_pipeline
@@ -844,7 +743,11 @@ def read_raw_events_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     if path_glob is not None:
+        # select specific files inside a mixed directory (the streaming
+        # source requires a directory basePath)
         reader = reader.option("pathGlobFilter", path_glob)
+    # normalize_ts also keeps the streaming output schema identical
+    # across testdata regens
     return normalize_ts(reader.load(events_dir), "ts")
 
 

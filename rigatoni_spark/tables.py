@@ -366,10 +366,6 @@ def concurrently(*thunks):
     return results
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql queries, plus
     the derived ``change_events`` envelope view — so SQL-first users

@@ -1,12 +1,17 @@
 from __future__ import annotations
 
+import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, so a clone or a scratch copy
+# tests its own code
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.001"
+SF_DIR = os.environ.get("RIGATONI_SF_DIR", SF_DIR)
 
 
 @pytest.fixture(scope="session")

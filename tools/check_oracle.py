@@ -13,10 +13,11 @@ import hashlib
 import math
 import sys
 from datetime import date, datetime
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region",
@@ -143,7 +144,12 @@ def main() -> int:
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = []
+    # a requested name the catalog does not have is a failure, never a
+    # silent skip: a typo would otherwise print "0 failures" for rows
+    # that never ran
+    failures = sorted(only - queries.keys())
+    for name in failures:
+        print(f"FAIL  {name}: unknown query (not in __spark_entry__.queries())")
     for name, fn in queries.items():
         if only and name not in only:
             continue
