@@ -177,16 +177,104 @@ def measure_latency(
     }
 
 
-def main() -> None:
-    from rigatoni_spark.catalog import QUERIES
+def run_spine(spark, sf_dir: str) -> float:
+    """Seconds for one pass of the reference's spine over ``sf_dir``'s
+    events: filter -> dedup -> serialize -> partitioned JSON write."""
     from rigatoni_spark.config import (
         PartitionStrategy,
         S3SinkConfig,
         SerializationFormat,
     )
     from rigatoni_spark.operators import dedup
-    from rigatoni_spark.session import get_spark
     from rigatoni_spark.sinks.writers import write_batch
+    from rigatoni_spark.sources.change_events import read_change_events
+
+    out_dir = tempfile.mkdtemp(prefix="bench_sink_")
+    try:
+        t0 = time.monotonic()
+        flowed = dedup.dedup_by_key(
+            read_change_events(
+                spark,
+                sf_dir,
+                pipeline=[{"$match": {"operationType": {"$in": ["insert", "update", "replace", "delete"]}}}],
+            )
+        )
+        write_batch(
+            flowed,
+            S3SinkConfig(
+                bucket=out_dir,
+                format=SerializationFormat.JSON,
+                partition_strategy=PartitionStrategy.DATE_HOUR_PARTITIONED,
+                single_file_per_group=False,
+            ),
+            batch_id=0,
+        )
+        return time.monotonic() - t0
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def run_stream(spark, table, batch_size: int = 400) -> float:
+    """Seconds for the micro-batched ``Pipeline`` to drain ``table``
+    (an Arrow events table) landed as 8 parquet chunks, at
+    ``batch_size``."""
+    import pyarrow.parquet as pq
+
+    from rigatoni_spark.config import (
+        PartitionStrategy,
+        PipelineConfig,
+        S3SinkConfig,
+        SerializationFormat,
+    )
+    from rigatoni_spark.streaming.pipeline import Pipeline
+
+    stream_root = tempfile.mkdtemp(prefix="bench_stream_")
+    try:
+        src = os.path.join(stream_root, "src")
+        out = os.path.join(stream_root, "out")
+        ckpt = os.path.join(stream_root, "ckpt")
+        os.makedirs(src)
+        n_chunks = 8
+        step = (table.num_rows + n_chunks - 1) // n_chunks
+        for i in range(n_chunks):
+            pq.write_table(
+                table.slice(i * step, step),
+                os.path.join(src, f"{i:03d}.parquet"),
+            )
+        cfg = PipelineConfig(
+            batch_timeout_secs=0.1, batch_size=batch_size, dedup_by_key=True
+        )
+        sink = S3SinkConfig(
+            bucket=out,
+            format=SerializationFormat.JSON,
+            partition_strategy=PartitionStrategy.DATE_HOUR_PARTITIONED,
+            single_file_per_group=False,
+        )
+        p = Pipeline(spark, cfg, sink, src, ckpt).start()
+        t0 = time.monotonic()
+        p.process_all_available()
+        sec = time.monotonic() - t0
+        p.stop()
+        return sec
+    finally:
+        shutil.rmtree(stream_root, ignore_errors=True)
+
+
+def run_row(spark, sf_dir: str, name: str) -> float:
+    """Seconds to build catalog row ``name`` and run it into the no-op
+    sink."""
+    from rigatoni_spark.catalog import QUERIES
+
+    t0 = time.monotonic()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.monotonic() - t0
+
+
+def main() -> None:
+    import pyarrow.parquet as pq
+
+    from rigatoni_spark.catalog import QUERIES
+    from rigatoni_spark.session import get_spark
     from rigatoni_spark.sources.change_events import read_change_events
 
     spark = get_spark(app_name="rigatoni_bench")
@@ -213,31 +301,6 @@ def main() -> None:
     # partitioned write (the reference's spine)
     n_in = read_change_events(spark, SF_DIR).count()
 
-    def run_spine() -> float:
-        out_dir = tempfile.mkdtemp(prefix="bench_sink_")
-        try:
-            t0 = time.monotonic()
-            flowed = dedup.dedup_by_key(
-                read_change_events(
-                    spark,
-                    SF_DIR,
-                    pipeline=[{"$match": {"operationType": {"$in": ["insert", "update", "replace", "delete"]}}}],
-                )
-            )
-            write_batch(
-                flowed,
-                S3SinkConfig(
-                    bucket=out_dir,
-                    format=SerializationFormat.JSON,
-                    partition_strategy=PartitionStrategy.DATE_HOUR_PARTITIONED,
-                    single_file_per_group=False,
-                ),
-                batch_id=0,
-            )
-            return time.monotonic() - t0
-        finally:
-            shutil.rmtree(out_dir, ignore_errors=True)
-
     # early runs include JIT/codegen warmup — measured to take TWO
     # passes to settle (run sequence 4.0/1.9/1.5/1.27/1.26s on this
     # box); report the best of three steady-state runs after two warmup
@@ -245,14 +308,14 @@ def main() -> None:
     # numbers, which also run a warmup phase to steady state — and the
     # same min-policy the per-query loop uses against hypervisor steal,
     # whose bursts were measured to swing single runs by up to 2x)
-    run_spine()
-    run_spine()
+    run_spine(spark, SF_DIR)
+    run_spine(spark, SF_DIR)
     # three steady-state samples now; three MORE land one-per-pass
     # inside the per-query loop below, so repeats are separated by
     # whole catalog passes (~minutes) — a steal burst that stretches
     # back-to-back runs (the r8 66.5K false alarm, settled by the
     # round-9 interleaved A/B in BENCH_AB_r09.json) can't span them all
-    spine_samples = [run_spine(), run_spine(), run_spine()]
+    spine_samples = [run_spine(spark, SF_DIR) for _ in range(3)]
 
     # --- streaming e2e: micro-batched pipeline, events/sec ---------------
     # (the figure comparable to the reference's claimed 10K-100K
@@ -267,61 +330,25 @@ def main() -> None:
     # 10,000; 400 here drives 2 multi-file micro-batches over the 8
     # source chunks) — and is the documented reason the streaming figure
     # trails the batch spine here.
-    import pyarrow.parquet as pq
-
-    from rigatoni_spark.config import PipelineConfig
-    from rigatoni_spark.streaming.pipeline import Pipeline
-
     table = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
-
-    def run_stream(batch_size: int = 400) -> float:
-        stream_root = tempfile.mkdtemp(prefix="bench_stream_")
-        try:
-            src = os.path.join(stream_root, "src")
-            out = os.path.join(stream_root, "out")
-            ckpt = os.path.join(stream_root, "ckpt")
-            os.makedirs(src)
-            n_chunks = 8
-            step = (table.num_rows + n_chunks - 1) // n_chunks
-            for i in range(n_chunks):
-                pq.write_table(
-                    table.slice(i * step, step),
-                    os.path.join(src, f"{i:03d}.parquet"),
-                )
-            cfg = PipelineConfig(
-                batch_timeout_secs=0.1, batch_size=batch_size, dedup_by_key=True
-            )
-            sink = S3SinkConfig(
-                bucket=out,
-                format=SerializationFormat.JSON,
-                partition_strategy=PartitionStrategy.DATE_HOUR_PARTITIONED,
-                single_file_per_group=False,
-            )
-            p = Pipeline(spark, cfg, sink, src, ckpt).start()
-            t0 = time.monotonic()
-            p.process_all_available()
-            sec = time.monotonic() - t0
-            p.stop()
-            return sec
-        finally:
-            shutil.rmtree(stream_root, ignore_errors=True)
 
     # like the spine: early runs pay streaming-plan codegen/JIT
     # (one-time in any long-lived deployment) and settle after two
     # passes. Sampling policy (round-5 fix): min over 3 runs with the
     # batch sizes INTERLEAVED across passes — the r3->r4 "streaming
     # regression" turned out to be hypervisor-steal bursts landing on
-    # both runs of the old back-to-back min-of-2 (tools/stream_probe.py
-    # A/B-measured r3 and r4 code within noise of each other);
+    # both runs of the old back-to-back min-of-2 (an interleaved A/B
+    # measured r3 and r4 code within noise of each other; today
+    # `tools/ab.py --work stream:400` takes that measurement);
     # separating repeats by a full sweep decorrelates the bursts, the
     # same policy the per-query loop adopted in round 4.
-    run_stream()
-    run_stream()
+    run_stream(spark, table)
+    run_stream(spark, table)
     sweep_sizes = (100, 400, 1600)
     stream_runs: dict[int, list[float]] = {bs: [] for bs in sweep_sizes}
     for _ in range(3):
         for bs in sweep_sizes:
-            stream_runs[bs].append(run_stream(bs))
+            stream_runs[bs].append(run_stream(spark, table, bs))
     stream_sec = min(stream_runs[400])
     timings["streaming_pipeline"] = round(stream_sec, 3)
     # throughput over INPUT events (stats.events_processed counts
@@ -376,14 +403,11 @@ def main() -> None:
     # spanning both passes of a 2-pass min). The min is the steady-state
     # figure an unthrottled executor fleet delivers.
     for pass_i in range(3):
-        for name, fn in QUERIES.items():
-            t0 = time.monotonic()
-            df = fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            sec = round(time.monotonic() - t0, 3)
+        for name in QUERIES:
+            sec = round(run_row(spark, SF_DIR, name), 3)
             if pass_i == 0 or sec < timings[name]:
                 timings[name] = sec
-        spine_samples.append(run_spine())  # pass-separated repeat
+        spine_samples.append(run_spine(spark, SF_DIR))  # pass-separated repeat
 
     spine_sec = min(spine_samples)
     timings["cdc_spine_write"] = round(spine_sec, 3)

@@ -95,8 +95,9 @@ def _dedup_exprs(
     so they are safely reusable across DataFrames/batches — and on the
     streaming path this construction is rebuilt EVERY trigger with an
     identical schema: measured ~160 ms/trigger of pure py4j round
-    trips at the production latency config (tools/latency_breakdown.py,
-    round 11), by far the largest non-Spark-job term in the foreachBatch
+    trips at the production latency config (round 11; the py4j cut's
+    A/B is LATENCY_AB_r11.json, and ``tools/ab.py --work latency:sync``
+    re-measures it), by far the largest non-Spark-job term in the foreachBatch
     body. The cache collapses it to a dict hit in steady state.
 
     ``session`` participates ONLY as a cache key: Column objects hold

@@ -561,7 +561,9 @@ def _write_persisted(
     # single os.walk instead of recursive glob + per-dir glob: the
     # rename pass sits on the per-trigger latency path (measured
     # 50-75 ms of the foreachBatch body at deep Hive layouts with the
-    # double traversal — tools/latency_breakdown.py), and one walk
+    # double traversal — tools/latency_breakdown.py, last held by
+    # commit a730d86; BENCH_DETAIL.json notes.addBatch_decomposition),
+    # and one walk
     # visits each dirent exactly once
     staged_dirs: list[tuple[str, list[str]]] = []
     for walk_dir, _subdirs, walk_files in os.walk(staging):

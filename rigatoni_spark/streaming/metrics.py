@@ -1,18 +1,16 @@
-"""Metrics (O5): the reference's Prometheus surface re-expressed on
-Spark's StreamingQueryListener.
+"""Metrics (O5): the reference's Prometheus surface.
 
 Metric names mirror rigatoni-core/src/metrics.rs:101-227 (all
-``rigatoni_*``). On a cluster these would flow to the Spark metrics
-sink / Prometheus servlet; here they accumulate in-process and are
-inspectable from tests — the same role as the reference's registry.
+``rigatoni_*``); only the names this package sets are declared. On a
+cluster these would flow to the Spark metrics sink / Prometheus
+servlet; here they accumulate in-process and are inspectable from
+tests — the same role as the reference's registry.
 """
 
 from __future__ import annotations
 
 import threading
 from collections import defaultdict
-
-from pyspark.sql.streaming import StreamingQueryListener
 
 
 class MetricsRegistry:
@@ -92,20 +90,15 @@ class MetricsRegistry:
 
 # Metric names (metrics.rs:101-227)
 EVENTS_PROCESSED = "rigatoni_events_processed_total"
-EVENTS_FAILED = "rigatoni_events_failed_total"
 RETRIES = "rigatoni_retries_total"
 BATCH_SIZE = "rigatoni_batch_size"
 BATCH_DURATION = "rigatoni_batch_duration_seconds"
-WRITE_DURATION = "rigatoni_destination_write_duration_seconds"
-WRITE_BYTES = "rigatoni_destination_write_bytes"
 WRITE_ERRORS = "rigatoni_destination_write_errors_total"
 BATCHES_WRITTEN = "rigatoni_batches_written_total"
 DLQ_EVENTS = "rigatoni_dlq_events_total"
 DLQ_BATCHES = "rigatoni_dlq_batches_total"
-QUEUE_SIZE = "rigatoni_batch_queue_size"
 ACTIVE_COLLECTIONS = "rigatoni_active_collections"
 PIPELINE_STATUS = "rigatoni_pipeline_status"
-STREAM_LAG = "rigatoni_change_stream_lag_seconds"
 
 # Beyond-reference: the corpus-admission gate (streaming/admission.py)
 # publishes under the same prefix/registry so one scrape covers both
@@ -116,30 +109,3 @@ ADMISSION_REJECTED = "rigatoni_admission_rejected_total"
 ADMISSION_BATCHES = "rigatoni_admission_batches_total"
 ADMISSION_STATE_PARTITIONS = "rigatoni_admission_state_partitions"
 
-
-class RigatoniQueryListener(StreamingQueryListener):
-    """Publishes query progress as rigatoni_* metrics
-    (StreamingQueryProgress ≈ the reference's per-batch counters,
-    pipeline.rs:1766-1781)."""
-
-    def __init__(self, registry: MetricsRegistry) -> None:
-        self.registry = registry
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        self.registry.set_gauge(PIPELINE_STATUS, 1.0, query=event.name or event.id)
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        q = p.name or str(p.id)
-        self.registry.inc(EVENTS_PROCESSED, p.numInputRows, query=q)
-        self.registry.set_gauge(BATCH_SIZE, p.numInputRows, query=q)
-        if p.batchDuration is not None:
-            self.registry.set_gauge(
-                BATCH_DURATION, p.batchDuration / 1000.0, query=q
-            )
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        self.registry.set_gauge(PIPELINE_STATUS, 0.0, query=str(event.id))
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass

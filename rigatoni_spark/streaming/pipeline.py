@@ -101,7 +101,7 @@ class _QueryState:
     # tuple they were built for: the list is rebuilt only when a new
     # collection appears, not every trigger (Columns wrap immutable
     # expression trees — reusable across batches; the per-trigger
-    # rebuild was a measured py4j latency term, latency_breakdown r11)
+    # rebuild was a measured py4j latency term, LATENCY_AB_r11.json)
     obs_exprs: tuple | None = None
     # the post-transform batch schema, learned on the first batch: the
     # stream's envelope is fixed, so later triggers skip the df.columns

@@ -255,7 +255,8 @@ def scaled_stream_width(
     bounded drain over a small feed that means hundreds of near-empty
     state partitions whose per-trigger open/commit overhead dominates
     the wall (measured on this engine: 8-core runs beat 32-core 2-3x on
-    the drain rows; tools/width_probe.py quantifies per-width). The
+    the drain rows; per-width runs in OPTIMIZATION_r14.md, from
+    tools/width_probe.py as last held by commit a730d86). The
     policy is DATA-scaled, not a local-core constant: at 100 TB
     ``bytes/target`` exceeds any session width and the clamp returns the
     cluster-set session width unchanged; only small feeds narrow.

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from rigatoni_spark.operators import bucketing
 from rigatoni_spark.tables import load_table
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 N_BUCKETS = 8
 
 

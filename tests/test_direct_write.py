@@ -30,7 +30,7 @@ from rigatoni_spark.sources.change_events import as_change_events
 from rigatoni_spark.streaming.pipeline import Pipeline
 from rigatoni_spark.tables import load_table
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 def _read_rows(root: str) -> list[dict]:

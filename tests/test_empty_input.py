@@ -19,11 +19,13 @@ import os
 import duckdb
 import pytest
 
+from tests.conftest import SF_DIR
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-SRC = "/root/testdata/sf0.001"
+SRC = SF_DIR
 
 
 @pytest.fixture(scope="module")

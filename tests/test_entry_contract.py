@@ -18,7 +18,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

@@ -10,7 +10,7 @@ import sys
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 EXAMPLES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples"
 )

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from rigatoni_spark.llm import dedup, minhash, multimodal, simhash, vectors
 from rigatoni_spark.tables import load_table
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -138,7 +138,7 @@ class TestDedup:
 
         from rigatoni_spark.tables import load_table
 
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+        docs = load_table(spark, SF_DIR, "documents")
         ckpt = str(tmp_path / "cc_ckpt")
         default = {
             (r["doc_id"], r["label"])

@@ -17,7 +17,7 @@ from rigatoni_spark.sources.change_events import (
 )
 from rigatoni_spark.tables import normalize_ts
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 SF_EVENTS = os.path.join(SF_DIR, "events.parquet")
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from rigatoni_spark.llm import ngram_lm
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -89,7 +90,7 @@ def test_prune_min_backs_off(tiny):
 def test_corpus_run_shapes(spark):
     from rigatoni_spark.tables import load_table
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF_DIR, "documents")
     out = ngram_lm.lm_surprisal(docs)
     rows = out.collect()
     assert len(rows) == docs.count()

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from rigatoni_spark.operators import dedup, filters, grouping
 from rigatoni_spark.operators.filters import UnsupportedMatchExpression
 from rigatoni_spark.sources.change_events import change_events_oracle_cte
+from tests.conftest import SF_DIR
 
 CTE = f"WITH change_events AS ({change_events_oracle_cte()})"
 
@@ -123,7 +124,7 @@ class TestMatchTranslator:
         pushed filter — the Spark analogue of server-side $match."""
         from rigatoni_spark.tables import load_table
 
-        raw = load_table(spark, "/root/testdata/sf0.001", "events")
+        raw = load_table(spark, SF_DIR, "events")
         plan = raw.filter(F.col("event_type") == "signup")._jdf.queryExecution().executedPlan().toString()
         assert "PushedFilters: [" in plan
         assert "event_type" in plan.split("PushedFilters")[1][:200]
@@ -137,7 +138,7 @@ class TestMatchTranslator:
 
         ce = read_change_events(
             spark,
-            "/root/testdata/sf0.001",
+            SF_DIR,
             pipeline=[{"$match": {"operationType": {"$in": ["insert"]}}}],
         )
         plan = ce._jdf.queryExecution().executedPlan().toString()
@@ -147,7 +148,7 @@ class TestMatchTranslator:
         from rigatoni_spark.operators.filters import match_pipeline
 
         base = match_pipeline(
-            read_change_events(spark, "/root/testdata/sf0.001"),
+            read_change_events(spark, SF_DIR),
             [{"$match": {"operationType": {"$in": ["insert"]}}}],
         )
         assert ce.count() == base.count()
@@ -160,7 +161,7 @@ class TestMatchTranslator:
         from rigatoni_spark.sources.change_events import read_change_events
 
         ce = read_change_events(
-            spark, "/root/testdata/sf0.001", pipeline=_NESTED_PIPELINE
+            spark, SF_DIR, pipeline=_NESTED_PIPELINE
         )
         plan = ce._jdf.queryExecution().executedPlan().toString()
         pushed = plan.split("PushedFilters")[1][:300]
@@ -170,7 +171,7 @@ class TestMatchTranslator:
         from rigatoni_spark.operators.filters import match_pipeline
 
         base = match_pipeline(
-            read_change_events(spark, "/root/testdata/sf0.001"),
+            read_change_events(spark, SF_DIR),
             _NESTED_PIPELINE,
         )
         assert ce.count() == base.count() > 0
@@ -343,8 +344,8 @@ class TestSaltedJoin:
         from rigatoni_spark.operators.skew import salted_join
         from rigatoni_spark.tables import load_table
 
-        orders = load_table(spark, "/root/testdata/sf0.001", "orders")
-        customer = load_table(spark, "/root/testdata/sf0.001", "customer")
+        orders = load_table(spark, SF_DIR, "orders")
+        customer = load_table(spark, SF_DIR, "customer")
         # align key names for the equi-join helper
         dim = customer.withColumnRenamed("c_custkey", "o_custkey")
         plain = orders.join(dim, ["o_custkey"])
@@ -382,7 +383,7 @@ class TestRangeJoin:
         )
         from rigatoni_spark.tables import load_table
 
-        events = load_table(spark, "/root/testdata/sf0.001", "events")
+        events = load_table(spark, SF_DIR, "events")
         bands = spark.createDataFrame(
             VALUE_TIERS, "tier string, lo double, hi double"
         )
@@ -409,7 +410,7 @@ def test_register_views_enables_sql_over_envelope(spark):
     change_events envelope are queryable via spark.sql after one call."""
     from rigatoni_spark.tables import TABLE_NAMES, register_views
 
-    register_views(spark, "/root/testdata/sf0.001")
+    register_views(spark, SF_DIR)
     for t in TABLE_NAMES:
         assert spark.sql(f"SELECT * FROM {t} LIMIT 1").count() >= 0
     row = spark.sql(
@@ -464,7 +465,7 @@ class TestHllSketch:
         from rigatoni_spark.operators.sketches import hll_distinct
         from rigatoni_spark.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF_DIR, "events")
         est = hll_distinct(ev, "user_id").collect()[0]["estimate_x1e6"] / 1e6
         exact = ev.select("user_id").distinct().count()
         # p=10 -> stderr ~3.3%; allow 4 sigma
@@ -476,7 +477,7 @@ class TestHllSketch:
         from rigatoni_spark.operators.sketches import hll_registers
         from rigatoni_spark.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF_DIR, "events")
         lo = ev.filter("user_id % 2 = 0")
         hi = ev.filter("user_id % 2 = 1")
         merged = {
@@ -497,7 +498,7 @@ class TestHllSketch:
         from rigatoni_spark.operators.sketches import hll_distinct
         from rigatoni_spark.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF_DIR, "events")
         df = hll_distinct(ev, "user_id")
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -521,7 +522,7 @@ class TestCmsSketch:
         )
         from rigatoni_spark.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF_DIR, "events")
         exact = {
             r["event_type"]: r["n"]
             for r in ev.groupBy("event_type").agg(
@@ -539,7 +540,7 @@ class TestCmsSketch:
         from rigatoni_spark.operators.sketches import cms_sketch
         from rigatoni_spark.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF_DIR, "events")
         lo, hi = ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")
         merged = {
             (r["row"], r["cell"]): r["n"]
@@ -586,7 +587,7 @@ class TestHdrQuantiles:
         from rigatoni_spark.operators.sketches import hdr_quantiles
         from rigatoni_spark.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF_DIR, "events")
         got = hdr_quantiles(ev, "value").collect()[0]
         exact = ev.selectExpr(
             "percentile(value, 0.50) AS p50",
@@ -606,7 +607,7 @@ class TestHdrQuantiles:
         from rigatoni_spark.operators.sketches import hdr_histogram
         from rigatoni_spark.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF_DIR, "events")
         lo, hi = ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")
         merged = {
             (r["shift"], r["top5"]): r["n"]
@@ -662,7 +663,7 @@ def test_hdr_grouped_matches_per_key_exact(spark):
     from rigatoni_spark.operators.sketches import hdr_quantiles_by
     from rigatoni_spark.tables import load_table
 
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF_DIR, "events")
     got = {r["key"]: r for r in hdr_quantiles_by(ev, "event_type", "value").collect()}
     # rank-based exact values (the sketch's own quantile definition —
     # interpolated percentile() can sit far from rank ceil(q*n) in a

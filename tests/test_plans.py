@@ -12,7 +12,7 @@ import pytest
 
 from rigatoni_spark.catalog import QUERIES
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 def _plan(spark, name: str) -> str:

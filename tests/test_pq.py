@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from rigatoni_spark.llm import pq
 from rigatoni_spark.tables import load_table
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")

@@ -11,13 +11,14 @@ from rigatoni_spark.functions import namespace_full_name
 from rigatoni_spark.schema import CHANGE_EVENT_SCHEMA, ENVELOPE_COLUMNS
 from rigatoni_spark.sources.change_events import as_change_events
 from rigatoni_spark.sources.kafka import parse_debezium_value
+from tests.conftest import SF_DIR
 
 
 class TestEnvelopeMapping:
     def test_update_lookup_controls_full_document(self, spark, change_events):
         from rigatoni_spark.tables import load_table
 
-        raw = load_table(spark, "/root/testdata/sf0.001", "events")
+        raw = load_table(spark, SF_DIR, "events")
         no_lookup = as_change_events(raw, update_lookup=False)
         # updates carry updated_fields but NO full_document (stream.rs:477-481)
         upd = no_lookup.filter("operation = 'update'")

@@ -16,7 +16,7 @@ import os
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 class TestPolicyMath:

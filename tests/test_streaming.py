@@ -23,8 +23,9 @@ from rigatoni_spark.config import (
     WatchLevel,
 )
 from rigatoni_spark.streaming.pipeline import Pipeline
+from tests.conftest import SF_DIR
 
-SF_EVENTS = "/root/testdata/sf0.001/events.parquet"
+SF_EVENTS = os.path.join(SF_DIR, "events.parquet")
 
 
 @pytest.fixture()

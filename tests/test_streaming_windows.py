@@ -12,8 +12,9 @@ from pyspark.sql import functions as F
 from rigatoni_spark.operators.batching import windowed_counts
 from rigatoni_spark.operators.dedup import dedup_stream_within_watermark
 from rigatoni_spark.sources.change_events import read_change_events_stream
+from tests.conftest import SF_DIR
 
-SF_EVENTS = "/root/testdata/sf0.001/events.parquet"
+SF_EVENTS = os.path.join(SF_DIR, "events.parquet")
 
 
 def _feed_all(src: str) -> None:
@@ -131,7 +132,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
     src = tmp_path / "ss_src"
     src.mkdir()
-    t = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    t = pq.read_table(SF_EVENTS)
     pq.write_table(t, str(src / "all.parquet"))
 
     def sides(ce):

@@ -11,7 +11,9 @@ import shutil
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 class TestSchemaCache:
@@ -90,7 +92,7 @@ class TestTsProbeCache:
         t0 = ce._probe_ts_type(spark, str(d), None)
         assert t0.typeName().startswith("timestamp")
         # land the real events file the way feeds do (tmp + rename)
-        tab = pq.read_table("/root/testdata/sf0.001/events.parquet")
+        tab = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
         tmp = tmp_path / "x.parquet"
         pq.write_table(tab, tmp)
         os.rename(tmp, d / "events.parquet")
@@ -113,7 +115,7 @@ class TestTsProbeCache:
         hit)."""
         import sys
 
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, TOOLS)
         from check_oracle import value_hash
 
         from rigatoni_spark import catalog
@@ -168,7 +170,7 @@ class TestLazyRelTables:
         results bit-identical to the DuckDB oracle."""
         import sys
 
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, TOOLS)
         from check_oracle import value_hash
 
         from rigatoni_spark import catalog
