@@ -902,12 +902,17 @@ def _drain_to_memory_table(
     (``session.rocksdb_state``): the 100 TB state posture (off-heap,
     per-commit cost = batch delta, not total state), and measured
     faster than the heap provider on every stateful row at bench scale
-    too."""
+    too.
+
+    The drain starts through ``session.start_checkpointed``: its
+    checkpoint is a local temp dir, so the offset log, commit log and
+    state-store commits run under the FileSystem-based checkpoint file
+    manager, without Hadoop's per-call forks on local paths."""
     import shutil
     import tempfile
     import uuid
 
-    from rigatoni_spark.session import rocksdb_state
+    from rigatoni_spark.session import rocksdb_state, start_checkpointed
 
     spark = df.sparkSession
     width = None
@@ -919,13 +924,12 @@ def _drain_to_memory_table(
     with tables.scoped_shuffle_width(spark, width), rocksdb_state(
         spark, changelog=True
     ):
-        q = (
+        q = start_checkpointed(
             df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            ckpt,
         )
         try:
             finished = q.awaitTermination(300)

@@ -27,6 +27,41 @@ enough, since those files arrive per task, after the daemon is running.
 ``spark.executorEnv.PYTHONPATH``, keeping any value passed in
 ``extra_conf``; that covers local mode from any working directory and
 executors that share the driver's filesystem layout.
+
+Checkpointed queries start through ``start_checkpointed``, which picks
+the checkpoint file manager by the location's filesystem scheme. Spark's
+default, ``FileContextBasedCheckpointFileManager``, reaches a ``file:``
+location through Hadoop's ``RawLocalFileSystem`` without native IO, where
+every file-status call (``getFileLinkStatus``) forks ``readlink``: ~154
+forks a trigger in the ``scd2_reorder`` drain, in the offset-log,
+commit-log and state-store commits (state commit 5-9 s a pass). On
+``file:`` only, the query starts with
+``FileSystemBasedCheckpointFileManager`` instead, whose ``getFileStatus``
+forks nothing. The ``chmod`` that ``RawLocalFileSystem`` forks after each
+file create (~40 a trigger) stays under both managers.
+
+- The scheme is Hadoop's: ``Path(location).toUri().getScheme()``, or,
+  for a schemeless path, that of ``FileSystem.getDefaultUri`` of the
+  session's Hadoop conf. A schemeless path on a cluster whose
+  ``fs.defaultFS`` is ``hdfs://`` keeps Spark's default; so does every
+  HDFS and object-store location, where FileContext's
+  rename-without-overwrite is atomic and makes a second writer on one
+  checkpoint fail. Neither the master nor the core count decides.
+- On ``file:`` nothing FileContext guaranteed is lost: neither manager
+  renames atomically without overwrite there. FileContext's
+  ``rename(src, dst, NONE)`` reaches ``AbstractFileSystem.renameInternal``,
+  which stats ``dst``, throws ``FileAlreadyExistsException`` if it
+  exists, then calls ``RawLocalFileSystem.rename``; the FileSystem-based
+  manager checks ``fs.exists(dst)``, throws if it exists, then calls
+  ``fs.rename``. Both check before they rename (Hadoop 3.4.2, Spark 4.1.2).
+- The conf is set only around ``writer.start()``. ``StreamExecution``'s
+  constructor runs inside ``start()``: it clones the session into
+  ``sparkSessionForStream`` and builds the checkpoint metadata from the
+  clone, and the lazy offset and commit logs and every batch's
+  state-store Hadoop conf read the clone. So the query keeps the manager
+  for its whole life, and queries started elsewhere keep their own.
+- A value the session already sets for
+  ``spark.sql.streaming.checkpointFileManagerClass`` wins.
 """
 
 from __future__ import annotations
@@ -34,6 +69,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
 _PACKAGE_PARENT = os.path.dirname(
@@ -175,3 +211,51 @@ class rocksdb_state:
                 self.spark.conf.set(
                     self._CHANGELOG_KEY, self._prev_changelog
                 )
+
+
+CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_file_manager(
+    path_scheme: str | None, default_scheme: str | None
+) -> str | None:
+    """The checkpoint file manager class to start a query with, or None
+    to keep Spark's default: FileSystem-based only when the location's
+    scheme (the default filesystem's for a schemeless path) is ``file``
+    (module docstring)."""
+    scheme = path_scheme or default_scheme
+    return FS_CHECKPOINT_FILE_MANAGER if (scheme or "").lower() == "file" else None
+
+
+def checkpoint_schemes(
+    spark: SparkSession, location: str
+) -> tuple[str | None, str | None]:
+    """Hadoop's scheme of ``location`` and of the session's default
+    filesystem, as ``checkpoint_file_manager`` takes them."""
+    hadoop_fs = spark._jvm.org.apache.hadoop.fs
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return (
+        hadoop_fs.Path(location).toUri().getScheme(),
+        hadoop_fs.FileSystem.getDefaultUri(conf).getScheme(),
+    )
+
+
+def start_checkpointed(writer: DataStreamWriter, location: str) -> StreamingQuery:
+    """Start ``writer`` with its checkpoint at ``location``, under the
+    checkpoint file manager its filesystem scheme calls for (module
+    docstring). The conf is scoped to ``start()`` alone; the query keeps
+    it for its whole life."""
+    spark = writer._spark
+    writer = writer.option("checkpointLocation", location)
+    manager = checkpoint_file_manager(*checkpoint_schemes(spark, location))
+    if manager is None or spark.conf.get(CHECKPOINT_FILE_MANAGER_KEY, None):
+        return writer.start()
+    spark.conf.set(CHECKPOINT_FILE_MANAGER_KEY, manager)
+    try:
+        return writer.start()
+    finally:
+        spark.conf.unset(CHECKPOINT_FILE_MANAGER_KEY)

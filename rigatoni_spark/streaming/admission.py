@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rigatoni_spark.llm import minhash
+from rigatoni_spark.session import start_checkpointed
 from rigatoni_spark.streaming import metrics as M
 
 
@@ -627,11 +628,11 @@ class AdmissionStream:
             .option("maxFilesPerTrigger", str(self.max_files_per_trigger))
             .parquet(self.source_dir)
         )
-        self._query = (
-            stream.writeStream.foreachBatch(self._admit)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName("corpus_admission")
-            .start()
+        self._query = start_checkpointed(
+            stream.writeStream.foreachBatch(self._admit).queryName(
+                "corpus_admission"
+            ),
+            self.checkpoint_dir,
         )
         return self
 

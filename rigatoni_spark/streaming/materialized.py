@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rigatoni_spark.operators.materialize import SNAPSHOT_COLUMNS, materialize_stream
+from rigatoni_spark.session import start_checkpointed
 from rigatoni_spark.sources.change_events import read_change_events_stream
 
 
@@ -216,12 +217,12 @@ class MaterializedView:
         )
         writer = stream.writeStream.queryName("materialized_view").foreachBatch(
             self._merge
-        ).option("checkpointLocation", self.checkpoint_dir)
+        )
         if available_now:
             writer = writer.trigger(availableNow=True)
         else:
             writer = writer.trigger(processingTime=f"{trigger_secs} seconds")
-        self._query = writer.start()
+        self._query = start_checkpointed(writer, self.checkpoint_dir)
         return self
 
     def process_all_available(self) -> None:

@@ -41,6 +41,7 @@ from rigatoni_spark.config import PipelineConfig, S3SinkConfig, WatchLevel, resu
 from rigatoni_spark.operators.dedup import dedup_by_key
 from rigatoni_spark.operators.filters import match_pipeline
 from rigatoni_spark.schema import OP_INVALIDATE
+from rigatoni_spark.session import start_checkpointed
 from rigatoni_spark.sinks.retry import RetryPolicy, with_retry
 from rigatoni_spark.sinks.writers import write_batch
 from rigatoni_spark.sources.change_events import read_change_events_stream
@@ -599,14 +600,7 @@ class Pipeline:
             def _batch(bdf: DataFrame, bid: int) -> None:
                 self._foreach_batch(bdf, bid, state)
 
-            writer = (
-                df.writeStream.queryName(name)
-                .foreachBatch(_batch)
-                .option(
-                    "checkpointLocation",
-                    f"{self.checkpoint_dir}/{name}",
-                )
-            )
+            writer = df.writeStream.queryName(name).foreachBatch(_batch)
             if self.config.backfill:
                 # B5 backfill: drain the whole archived feed exactly
                 # once and terminate. maxFilesPerTrigger still bounds
@@ -643,7 +637,7 @@ class Pipeline:
                             "true",
                         )
                     )
-            return writer.start()
+            return start_checkpointed(writer, f"{self.checkpoint_dir}/{name}")
 
         stream = read_change_events_stream(
             self.spark,

@@ -43,6 +43,26 @@ def test_verdict_reproduces_recorded_pyworker_gain(capsys):
     )
 
 
+def test_verdict_names_files_it_cannot_read_and_exits_nonzero(tmp_path, capsys):
+    # a recorded set in another row shape (no workload) yields no group
+    one_body = str(ROOT / "BENCH_AB_one_body.jsonl")
+    assert ab.main(["--verdict", one_body]) == 1
+    captured = capsys.readouterr()
+    assert captured.out.strip() == ""
+    assert f"{one_body}: 58 of 58 rows unread (no side or workload); no (workload, trace) group" in captured.err
+
+    # one stray row beside readable runs: the verdict prints, the run fails
+    mixed = tmp_path / "mixed.jsonl"
+    rows = [{"what": "header"}, _row(1, "parent", 100.0), _row(1, "change", 101.0),
+            {"seed": 2, "side": "parent", "result": {}}]
+    mixed.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    holdback = str(ROOT / "BENCH_AB_holdback.jsonl")
+    assert ab.main(["--verdict", holdback, str(mixed)]) == 1
+    captured = capsys.readouterr()
+    assert "w events_per_s: 100.0 -> 101.0" in captured.out
+    assert captured.err.splitlines() == [f"{mixed}: 1 of 3 rows unread (no side or workload)"]
+
+
 def _pairs(shift: float, losses: int, spread: float = 1.0) -> list[tuple[float, float]]:
     """10 pairs around 100 with parent IQR ~``spread``% of the median;
     the change is ``shift`` higher except in ``losses`` pairs."""

@@ -8,6 +8,8 @@
     python3 tools/ab.py --a PARENT --b CHANGE --work stream:400
     python3 tools/ab.py --a PARENT --b CHANGE --work latency:sync|async|direct
     python3 tools/ab.py --verdict BENCH_AB_x.jsonl [more.jsonl ...]
+        (exits 1, naming the file on stderr, if a file has run rows it
+        cannot read or yields no verdict group)
 
 Side A is the parent, side B the change: each a checkout (a clean clone)
 plus optional Spark confs, handed to the session through
@@ -127,6 +129,10 @@ def _ok(row: dict) -> bool:
     )
 
 
+def _readable(row: dict) -> bool:
+    return row.get("side") in SIDES and "workload" in row
+
+
 def _fmt(x: float) -> str:
     return f"{x:,.1f}" if abs(x) >= 100 else f"{x:.4g}"
 
@@ -137,7 +143,7 @@ def verdict_lines(rows: list[dict]) -> list[str]:
     declared = {m["name"]: m for m in bench["end_to_end"] + bench["per_layer"]}
     groups: dict[tuple, list[dict]] = {}
     for r in rows:
-        if r.get("side") in SIDES and "workload" in r:
+        if _readable(r):
             groups.setdefault((r["workload"], r.get("trace", 0)), []).append(r)
     out = []
     for (workload, trace), runs in groups.items():
@@ -197,6 +203,20 @@ def read_rows(paths: list[str]) -> list[dict]:
         with open(path) as fh:
             rows.extend(json.loads(ln) for ln in fh if ln.strip())
     return rows
+
+
+def unread(path: str) -> str | None:
+    """What ``verdict_lines`` cannot read in ``path``: its run rows
+    without a side or a workload (``what`` header lines aside), or no
+    run row it can group at all. None when every run row reads."""
+    runs = [r for r in read_rows([path]) if "what" not in r]
+    bad = sum(not _readable(r) for r in runs)
+    if bad == 0 and runs:
+        return None
+    return (
+        f"{path}: {bad} of {len(runs)} rows unread (no side or workload)"
+        + ("; no (workload, trace) group" if bad == len(runs) else "")
+    )
 
 
 # ---------------------------------------------------------------- children
@@ -357,8 +377,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.child:
         _child(json.loads(args.child))
         return 0
+    problems = []
     if args.verdict:
         rows = read_rows(args.verdict)
+        problems = [p for p in map(unread, args.verdict) if p]
     else:
         kind = args.work.partition(":")[0] if args.work else None
         if not (args.a and args.b and args.out) or kind not in (
@@ -367,7 +389,9 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("a run needs --a, --b, --out and a --work kind")
         rows = run(args)
     print("\n".join(verdict_lines(rows)))
-    return 0
+    for p in problems:
+        print(p, file=sys.stderr)
+    return 1 if problems else 0
 
 
 if __name__ == "__main__":

@@ -796,7 +796,7 @@ def probe_scd2_state(spark, sf_dir: str) -> None:
         materialize_stream,
         scd2_stream,
     )
-    from rigatoni_spark.session import rocksdb_state
+    from rigatoni_spark.session import rocksdb_state, start_checkpointed
     from rigatoni_spark.sources.change_events import (
         read_change_events_stream,
     )
@@ -837,16 +837,12 @@ def probe_scd2_state(spark, sf_dir: str) -> None:
                     spark, feed, max_files_per_trigger=1
                 )
                 with rocksdb_state(spark):
-                    q = (
+                    q = start_checkpointed(
                         op(sdf)
                         .writeStream.outputMode("append")
                         .format("noop")
-                        .option(
-                            "checkpointLocation",
-                            os.path.join(root, f"ck_{op_name}"),
-                        )
-                        .trigger(availableNow=True)
-                        .start()
+                        .trigger(availableNow=True),
+                        os.path.join(root, f"ck_{op_name}"),
                     )
                     t0 = time.time()
                     ok = q.awaitTermination(1800)
@@ -897,7 +893,7 @@ def probe_scd2_reorder_state(spark, sf_dir: str, copies: int = 10) -> None:
     import pyarrow.parquet as pq
 
     from rigatoni_spark.operators.materialize import scd2_stream
-    from rigatoni_spark.session import rocksdb_state
+    from rigatoni_spark.session import rocksdb_state, start_checkpointed
     from rigatoni_spark.sources.change_events import (
         read_change_events_stream,
     )
@@ -965,15 +961,12 @@ def probe_scd2_reorder_state(spark, sf_dir: str, copies: int = 10) -> None:
                 spark, feed, max_files_per_trigger=1
             )
             with rocksdb_state(spark):
-                q = (
+                q = start_checkpointed(
                     scd2_stream(sdf, reorder_within=f"{delay_s} seconds")
                     .writeStream.outputMode("append")
                     .format("noop")
-                    .option(
-                        "checkpointLocation", os.path.join(root, "ck_reorder")
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                    .trigger(availableNow=True),
+                    os.path.join(root, "ck_reorder"),
                 )
                 t0 = time.time()
                 ok = q.awaitTermination(1800)
