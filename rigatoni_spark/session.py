@@ -16,8 +16,12 @@ and the spark-core jar, 0.15-0.23 s of CPU per task on a 4-core x86 VM
 (PySpark 4.1.2, CPython 3.11), most of the Python CPU of the per-key
 stateful folds. The daemon runs
 pyspark's own ``daemon.manager()`` after one patch that skips the re-read
-while an archive's mtime and size are unchanged. On 3.13+ it changes
-nothing.
+while an archive's mtime and size are unchanged (on 3.13+ the patch
+changes nothing). Before it forks, it also imports ``pyspark.worker`` and
+``rigatoni_spark.operators`` (pandas, pyarrow, the folds) and freezes
+that import heap (``gc.freeze()``), so the ``gc.collect()`` pyspark runs
+in a reused worker after each task walks only the task's own objects:
+a median 59 ms a task fell to 0.5 ms in the ``scd2_reorder`` drain.
 
 Cluster requirement: ``rigatoni_spark`` must be importable on every
 executor when the daemon starts, i.e. installed there or on the

@@ -1,14 +1,18 @@
 """The engine's Python worker daemon (``rigatoni_spark._pyworker``).
 
-Three layers: the zipimport stamp rule on its own (no Spark), the
-shared engine session running its Python workers under the daemon with
-no per-task zip re-reads, and a fresh driver started from an unrelated
-working directory with ``PYTHONPATH`` unset still starting the daemon.
+Four layers: the zipimport stamp rule on its own (no Spark), the
+preload contract (importing ``rigatoni_spark.operators`` starts nothing,
+since every daemon imports it before it forks), the shared engine
+session running its Python workers under the daemon with no per-task
+zip re-reads and with the import heap frozen, and a fresh driver started
+from an unrelated working directory with ``PYTHONPATH`` unset still
+starting the daemon.
 """
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
 import subprocess
 import sys
@@ -94,6 +98,84 @@ def test_patch_not_installed_on_313(monkeypatch, fresh_patch):
     assert not _pyworker.install()
     assert zipimport._read_directory is read
     assert zipimport.zipimporter.invalidate_caches is invalidate
+
+
+def test_operators_import_starts_nothing(tmp_path):
+    # the daemon imports this before it forks: every worker would lose a
+    # thread started here and share a gateway socket or child process
+    code = textwrap.dedent(
+        """
+        import json, os, threading
+        import rigatoni_spark.operators
+        from pyspark import SparkContext
+        try:
+            os.waitpid(-1, os.WNOHANG)
+            children = True
+        except ChildProcessError:
+            children = False
+        print(json.dumps({
+            "threads": threading.active_count(),
+            "context": SparkContext._active_spark_context is not None,
+            "gateway": SparkContext._gateway is not None
+            or SparkContext._jvm is not None,
+            "children": children,
+        }))
+        """
+    )
+    env = dict(os.environ, PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.splitlines()[-1]) == {
+        "threads": 1,
+        "context": False,
+        "gateway": False,
+        "children": False,
+    }
+
+
+def test_engine_session_workers_inherit_frozen_import_heap(spark):
+    def probe(batches):
+        import gc
+        import os
+        import time
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {
+                "pid": [os.getpid()],
+                "at": [time.monotonic_ns()],
+                "frozen": [gc.get_freeze_count()],
+            }
+        )
+
+    rows = (
+        spark.range(32)
+        .repartition(16)
+        .mapInPandas(probe, "pid long, at long, frozen long")
+        .collect()
+    )
+    by_pid: dict[int, list[tuple[int, int]]] = {}
+    for r in rows:
+        by_pid.setdefault(r["pid"], []).append((r["at"], r["frozen"]))
+    # 16 tasks on 8 task slots: some worker serves more than one
+    assert len(rows) > len(by_pid)
+    for tasks in by_pid.values():
+        counts = [frozen for _, frozen in sorted(tasks)]
+        # pandas, pyarrow, pyspark and the folds are ~73K objects
+        assert min(counts) >= 30_000
+        # fixed once in the daemon: a task may free a frozen object, but
+        # none adds one (a re-freeze would add the task's whole heap)
+        assert counts == sorted(counts, reverse=True)
 
 
 def test_engine_session_workers_run_under_daemon(spark):
