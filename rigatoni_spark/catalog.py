@@ -894,9 +894,11 @@ def _drain_to_memory_table(
     DATA-SCALED state/shuffle width policy (round-14, guide §2.2,
     ``tables.scaled_stream_width``): the query's state partitioning is
     sized to the bounded feed's bytes instead of the session's
-    cluster-compute width, clamped to [floor, session width]. The conf
-    stays scoped from start() through awaitTermination because the
-    stream captures it at first-batch planning.
+    cluster-compute width, clamped to [floor, session width], where the
+    floor is itself clamped to the session's task slots so a small
+    drain's state stage runs in one wave. The conf stays scoped from
+    start() through awaitTermination because the stream captures it at
+    first-batch planning.
 
     Every drain runs under RocksDB + changelog checkpointing
     (``session.rocksdb_state``): the 100 TB state posture (off-heap,

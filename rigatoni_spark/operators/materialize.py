@@ -163,6 +163,15 @@ _OUT_SCHEMA = T.StructType(
 SNAPSHOT_COLUMNS = _OUT_SCHEMA.names
 
 
+# What a per-key fold's input carries across the Python boundary: the
+# grouping keys (the fold wrapper reads each group's key from them) and
+# the columns the folds read. pyspark converts every column of every key
+# chunk with its own arrow_to_pandas, so each envelope column the fold
+# never reads would cost one conversion per key.
+_KEYS = ("collection", "document_key")
+_FOLD_INPUT = (*_KEYS, "operation", "full_document", "__version")
+
+
 def materialize_stream(ce: DataFrame) -> DataFrame:
     """Streaming materialization: emits one snapshot row per key per
     micro-batch in which that key changed (deletes emitted as tombstone
@@ -209,8 +218,10 @@ def materialize_stream(ce: DataFrame) -> DataFrame:
                 }
             )
 
-    prepared = ce.withColumn("__version", F.col("resume_token").cast("bigint"))
-    return prepared.groupBy("collection", "document_key").applyInPandasWithState(
+    prepared = ce.withColumn(
+        "__version", F.col("resume_token").cast("bigint")
+    ).select(*_FOLD_INPUT)
+    return prepared.groupBy(*_KEYS).applyInPandasWithState(
         update,
         outputStructType=_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
@@ -392,14 +403,17 @@ def scd2_stream(
             yield _scd2_emit(rows)
         hb.commit((open_op, open_doc, open_from, last_from))
 
+    columns = list(_FOLD_INPUT)
     if reorder:
         ce = ce.withWatermark("cluster_time", reorder_within).withColumn(
             holdback.TS_MS, F.unix_millis(F.col("cluster_time"))
         )
+        # cluster_time carries the watermark the event-time timeout needs
+        columns += ["cluster_time", holdback.TS_MS]
     prepared = ce.withColumn(
         "__version", F.col("resume_token").cast("bigint")
-    )
-    return prepared.groupBy("collection", "document_key").applyInPandasWithState(
+    ).select(*columns)
+    return prepared.groupBy(*_KEYS).applyInPandasWithState(
         fold,
         outputStructType=_SCD2_OUT_SCHEMA,
         stateStructType=(

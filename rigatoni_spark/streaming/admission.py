@@ -362,8 +362,8 @@ class AdmissionStream:
         # run at the session's cluster-compute width otherwise — 32
         # near-empty tasks, 32 tiny files and a 32-entry commit walk
         # per write at bench scale. Width scales with the FEED's bytes
-        # (floor 8, clamp to session), so a 100 TB feed keeps the
-        # cluster-set width unchanged.
+        # above a floor of 8 clamped to the session's width and task
+        # slots, so a 100 TB feed keeps the cluster-set width unchanged.
         width = scaled_stream_width(self.spark, self.source_dir)
         with scoped_shuffle_width(self.spark, width):
             self._admit_body(batch, batch_id, Observation)

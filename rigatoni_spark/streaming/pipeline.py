@@ -113,6 +113,9 @@ class _QueryState:
 # keys_written keeps this many of the most recent keys (~10 MiB of
 # strings): it is a recent-window manifest, the sink tree is the record
 _MAX_KEYS_WRITTEN = 100_000
+# batch_commits keeps the most recent this many batches (~0.6 MiB): the
+# window latency_summary() and the latency benches read
+_MAX_BATCH_COMMITS = 4096
 
 
 @dataclass
@@ -190,12 +193,12 @@ class Pipeline:
         self.stats = PipelineStats()
         self.metrics = M.MetricsRegistry()
         # per-batch commit log (monotonic commit wall, events, batch
-        # processing seconds) — the raw series behind end-to-end
-        # latency measurement (arrival -> sink-commit percentiles in
-        # bench.py) and lag alerting. Bounded: a 5-second-trigger
-        # pipeline takes ~7 months to fill 4M entries.
+        # processing seconds) of the most recent _MAX_BATCH_COMMITS
+        # batches — the raw series behind end-to-end latency
+        # measurement (arrival -> sink-commit percentiles in bench.py)
+        # and lag alerting; older batches drop out
         self.batch_commits: deque[tuple[float, int, float]] = deque(
-            maxlen=4_000_000
+            maxlen=_MAX_BATCH_COMMITS
         )
         self._queries: list = []
         self._lock = threading.Lock()
@@ -738,9 +741,11 @@ class Pipeline:
         return any(q.isActive for q in self._queries)
 
     def latency_summary(self) -> dict[str, float]:
-        """Per-batch processing-latency percentiles from the commit
-        log (the operational half of the reference's published latency
-        envelope, docs/architecture.md:387-391) — also published as
+        """Per-batch processing-latency percentiles over the commit
+        log's window: the most recent ``_MAX_BATCH_COMMITS`` batches
+        (all of them until that many have committed; ``batches`` counts
+        the window). The operational half of the reference's published
+        latency envelope, docs/architecture.md:387-391 — also published as
         ``rigatoni_batch_duration_seconds{quantile=...}`` summary
         gauges so one Prometheus scrape carries them. Empty dict until
         the first batch commits. End-to-end arrival→commit latency

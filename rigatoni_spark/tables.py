@@ -246,8 +246,8 @@ def scaled_stream_width(
     target_bytes: int | None = None,
 ) -> int:
     """Data-scaled shuffle/state partition width for a BOUNDED streaming
-    drain (guide §2.2): ``clamp(ceil(feed_bytes / target), floor,
-    session shuffle width)``.
+    drain (guide §2.2): ``max(lo, min(session, ceil(feed_bytes /
+    target)))`` with ``lo = min(floor, session, defaultParallelism)``.
 
     A streaming query's state partitioning is fixed at the session's
     ``spark.sql.shuffle.partitions`` when the first batch plans — a
@@ -267,7 +267,23 @@ def scaled_stream_width(
 
     The floor covers per-KEY compute-heavy state folds
     (applyInPandasWithState), where parallelism matters even for tiny
-    feeds (measured: widths < 8 regress the scd2/pre-image drains).
+    feeds: widths < 8 regressed the scd2/pre-image drains on a
+    32-core session, where 8 tasks run as one wave. The floor never
+    forces a second wave: it is clamped to the session's task slots
+    (``sparkContext.defaultParallelism``), because every task of the
+    state stage pays a fixed per-trigger cost (store load, changelog
+    commit, Python invocation). On a 4-slot session (4-vCPU VM) a width
+    of 8 runs two waves of fold tasks every trigger; there a perfbench
+    ``scd2_reorder`` pass took a median 3.71 s at width 4 against
+    5.14 s at 8, and widths 2 and 1 lost again (4.13 s, 5.69 s).
+    Above the floor the width still scales with the feed's bytes, up
+    to the session width.
+
+    ``defaultParallelism`` counts the slots the session holds when the
+    drain plans. Under dynamic allocation that can be fewer than the
+    cluster will grant; set ``spark.default.parallelism`` (which pins
+    ``defaultParallelism``) to the slot count the drain should see.
+
     For LONG-LIVED production streams size state to peak expected
     volume, not first-batch volume — this helper is for bounded drains
     whose input is fully on disk when the query starts.
@@ -282,8 +298,9 @@ def scaled_stream_width(
             )
         )
     session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    lo = min(floor, session_w, spark.sparkContext.defaultParallelism)
     data_w = -(-feed_bytes(*paths) // target_bytes)  # ceil
-    return max(min(floor, session_w), min(session_w, data_w))
+    return max(lo, min(session_w, data_w))
 
 
 class scoped_shuffle_width:

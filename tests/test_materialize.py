@@ -111,6 +111,48 @@ class TestStreamingMaterialize:
         assert upserts == expected
 
 
+def _fold_input_columns(df) -> list[str]:
+    """Column names of the applyInPandasWithState operator's input in
+    the analyzed plan of ``df`` (what crosses the Python boundary)."""
+    node = df._jdf.queryExecution().analyzed()
+    while "FlatMapGroupsInPandasWithState" not in node.nodeName():
+        node = node.children().apply(0)
+    return list(node.child().schema().fieldNames())
+
+
+class TestFoldInputColumns:
+    """The per-key folds ship only the columns they read: the grouping
+    keys, operation/full_document/__version, and in reorder mode the
+    watermarked cluster_time and __ts_ms. Every other envelope column
+    would cost one arrow_to_pandas per key chunk. The drains that
+    compare these operators' rows with the batch oracle are
+    TestStreamingMaterialize and TestScd2Stream."""
+
+    FOLD = ["collection", "document_key", "operation", "full_document",
+            "__version"]
+
+    def _stream(self, spark):
+        return read_change_events_stream(spark, SF_DIR, path_glob="events.parquet")
+
+    def test_materialize_stream(self, spark):
+        df = materialize_stream(self._stream(spark))
+        assert _fold_input_columns(df) == self.FOLD
+
+    def test_scd2_stream_strict(self, spark):
+        from rigatoni_spark.operators.materialize import scd2_stream
+
+        df = scd2_stream(self._stream(spark))
+        assert _fold_input_columns(df) == self.FOLD
+
+    def test_scd2_stream_reorder(self, spark):
+        from rigatoni_spark.operators.materialize import scd2_stream
+
+        df = scd2_stream(self._stream(spark), reorder_within="1 minute")
+        assert _fold_input_columns(df) == self.FOLD + [
+            "cluster_time", "__ts_ms"
+        ]
+
+
 class TestMaterializedView:
     def test_view_matches_batch_snapshot_across_restart(self, spark, tmp_path):
         import pyarrow.parquet as pq

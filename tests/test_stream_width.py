@@ -1,13 +1,16 @@
-"""The round-14 data-scaled stream state/shuffle width policy
+"""The data-scaled stream state/shuffle width policy
 (tables.scaled_stream_width + tables.scoped_shuffle_width, applied by
-catalog._drain_to_memory_table when the drain passes its feed).
+catalog._drain_to_memory_table when the drain passes its feed, by the
+cdc_stream_materialized_view drain and by AdmissionStream._admit).
 
 A streaming query's state partitioning is fixed at the session's
 spark.sql.shuffle.partitions when the first batch plans — cluster-compute
 width, not feed width. For bounded drains over small feeds the policy
-narrows it to clamp(ceil(bytes/target), floor, session), which is
-data-scaled (a 100 TB feed saturates the clamp and keeps the session
-width), not a local-core constant.
+narrows it to max(lo, min(session, ceil(bytes/target))) with
+lo = min(floor, session, defaultParallelism): data-scaled (a 100 TB feed
+saturates the clamp and keeps the session width), not a local-core
+constant, and the floor never asks for more tasks than the session has
+slots, so a small drain's state stage runs in one wave.
 """
 from __future__ import annotations
 
@@ -26,8 +29,10 @@ class TestPolicyMath:
         p = tmp_path / "tiny.bin"
         p.write_bytes(b"x" * 1024)
         session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        slots = spark.sparkContext.defaultParallelism
         w = scaled_stream_width(spark, str(p))
-        assert w == min(8, session_w)  # default floor, clamped to session
+        # default floor, clamped to the session width and its slots
+        assert w == min(8, session_w, slots)
 
     def test_large_feed_keeps_the_session_width(self, spark, tmp_path):
         from rigatoni_spark.tables import scaled_stream_width
@@ -72,6 +77,59 @@ class TestPolicyMath:
             assert scaled_stream_width(spark, str(p)) == 2
         finally:
             spark.conf.unset("spark.rigatoni.stream.width.floor")
+
+
+class TestFloorClampedToSlots:
+    """The floor is clamped to the session's task slots
+    (sparkContext.defaultParallelism), so it never forces a second wave
+    of state tasks. The tests stub the slot count: the suite's session
+    has 8 slots, where the floor of 8 is already one wave."""
+
+    @pytest.fixture
+    def slots(self, spark, monkeypatch):
+        def set_slots(n):
+            monkeypatch.setattr(
+                type(spark.sparkContext),
+                "defaultParallelism",
+                property(lambda self: n),
+            )
+
+        return set_slots
+
+    def _tiny(self, tmp_path):
+        p = tmp_path / "tiny.bin"
+        p.write_bytes(b"x" * 1024)
+        return str(p)
+
+    def test_four_slots_clamp_a_tiny_feed_to_one_wave(
+        self, spark, slots, tmp_path
+    ):
+        from rigatoni_spark.tables import scaled_stream_width
+
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 8
+        slots(4)
+        assert scaled_stream_width(spark, self._tiny(tmp_path)) == 4
+
+    def test_more_slots_than_the_floor_keep_the_floor(
+        self, spark, slots, tmp_path
+    ):
+        from rigatoni_spark.tables import scaled_stream_width
+
+        slots(16)
+        session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert scaled_stream_width(spark, self._tiny(tmp_path)) == min(
+            8, session_w
+        )
+
+    def test_large_feed_keeps_the_session_width_on_few_slots(
+        self, spark, slots, tmp_path
+    ):
+        from rigatoni_spark.tables import scaled_stream_width
+
+        slots(4)
+        session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        w = scaled_stream_width(spark, self._tiny(tmp_path), target_bytes=1)
+        assert w == session_w
 
 
 class TestScopedWidth:

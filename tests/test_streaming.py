@@ -1192,3 +1192,21 @@ def test_keys_written_keeps_only_the_most_recent(monkeypatch):
         p._finish_batch(2, [f"k{b}a", f"k{b}b"], {"c0"}, 0.0, state)
     assert list(p.stats.keys_written) == ["k1b", "k2a", "k2b"]
     assert p.stats.batches_written == 3
+
+
+def test_batch_commits_keeps_a_bounded_recent_window(monkeypatch):
+    """The per-batch commit log is a window of the most recent
+    _MAX_BATCH_COMMITS batches, and latency_summary() reads only it."""
+    from rigatoni_spark.streaming import pipeline as P
+
+    assert P._MAX_BATCH_COMMITS <= 10_000
+    monkeypatch.setattr(P, "_MAX_BATCH_COMMITS", 3)
+    p = Pipeline(
+        None, PipelineConfig(), S3SinkConfig(bucket="/tmp/x"), "src", "ck"
+    )
+    state = P._QueryState()
+    for n in range(1, 6):
+        p._finish_batch(n, [], {"c0"}, 0.0, state)
+    assert [n for _, n, _ in p.batch_commits] == [3, 4, 5]
+    assert p.latency_summary()["batches"] == 3.0
+    assert p.stats.batches_written == 5
